@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -9,6 +12,20 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * All engine queries read via this single entry point so scan options
   * stay uniform. Explicit-schema reads are unnecessary for parquet (the
   * footer IS the schema — deterministic, unlike CSV `inferSchema`).
+  *
+  * It also owns the two kinds of scratch-parquet pin under
+  * [[scratchDir]]:
+  *  - transient pins ([[scratchPin]], [[PinChain]]) hold one query's
+  *    round state at `pins/<session token>/<tag>.parquet`. The next
+  *    invocation of the same site overwrites them; the session's
+  *    shutdown hook deletes its whole `pins/<token>` subtree.
+  *  - keyed trunks ([[pinKeyed]]) hold relations that depend only on
+  *    the corpus at a data dir, written once per (session, dir) at
+  *    `pins-keyed/<tag>-<sessionKey>.parquet` and read by every later
+  *    query. The shutdown hook deletes the trunks whose name carries
+  *    its token.
+  * Entries of either kind left by a killed JVM are reaped by
+  * [[sweepStaleScratch]] once they are older than [[SweepAgeMs]].
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -140,36 +157,47 @@ object Tables {
     }
   }
 
-  /** One-time guarded pin per (session, data dir) — the
-    * `postingsTrunk` pattern (VERDICT r11 #1a) for relations that are
-    * pure functions of the corpus at `dir` and are re-derived by
-    * every invocation of their query family (the symmetric k-NN
-    * adjacency, the seeded-BFS relation): the first caller computes
-    * and writes, every later caller — including later bench reps and
-    * other queries in the family — does a plain columnar read. The
-    * existence check makes a mid-session scratch wipe a silent
-    * rebuild, not a PATH_NOT_FOUND (chaos-tested). */
+  /** One-time guarded pin per (session, data dir) — the trunk for a
+    * relation that is a pure function of the corpus at `dir` and is
+    * read by every invocation of its query family (the k-NN edges,
+    * the adjacency trunks, the postings index, the dedup trunk): the
+    * first caller computes and writes, every later caller — including
+    * later bench reps and other queries in the family — does a plain
+    * columnar read. The existence check makes a mid-session scratch
+    * wipe a silent rebuild, not a PATH_NOT_FOUND (chaos-tested).
+    *
+    * A trunk with several outputs is a chain of calls, each built from
+    * the previous one's read. A `build` may itself call `pinKeyed` for
+    * a trunk it derives from; such nesting follows the derivation
+    * order (undadj → knnedges), so the build locks are taken in one
+    * order and never deadlock. */
   def pinKeyed(spark: SparkSession, tag: String, dir: String)(build: => DataFrame): DataFrame = {
-    val path = s"$scratchDir/pins-keyed/$tag-${sessionKey(spark, dir)}.parquet"
-    // JVM-level build lock per (tag, session, dir) — the public trunk
-    // consumers are no longer sequential by construction (ADVICE r15):
-    // two threads sharing one SparkSession must not race the overwrite
-    // build against a reader on the same path; one builds, the other
-    // waits then reads.
-    val lock = pinLocks.computeIfAbsent(s"$tag-${sessionKey(spark, dir)}", _ => new Object)
+    val key = s"$tag-${sessionKey(spark, dir)}"
+    val path = s"$scratchDir/pins-keyed/$key.parquet"
+    // JVM-level build lock per (tag, session, dir): two threads sharing
+    // one SparkSession must not race the overwrite build against a
+    // reader on the same path; one builds, the other waits then reads.
+    val lock = pinLocks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
-      if (!scratchReady(spark, s"graft.pin.$tag", dir, Seq(path))) {
+      if (!scratchReady(spark, s"graft.pin.$tag", dir, path)) {
         StageTimes.timed(s"pin.$tag") {
           build.write.mode("overwrite").parquet(path)
         }
+        pinBuildCounts.computeIfAbsent(tag, _ => new AtomicInteger).incrementAndGet()
         scratchMark(spark, s"graft.pin.$tag", dir)
       }
     }
     spark.read.parquet(path)
   }
 
-  private val pinLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val pinLocks = new ConcurrentHashMap[String, Object]()
+
+  private val pinBuildCounts = new ConcurrentHashMap[String, AtomicInteger]()
+
+  /** How many times [[pinKeyed]] has built `tag` in this JVM, over all
+    * sessions and dirs (test hook: a trunk read must not rebuild). */
+  private[graft] def pinBuilds(tag: String): Int =
+    Option(pinBuildCounts.get(tag)).fold(0)(_.get)
 
   /** Session-scoped scratch key: the random session token (so two
     * sessions sharing the scratch root never collide) × a
@@ -253,8 +281,8 @@ object Tables {
   }
 
   /** Guard predicate for one-time scratch materializations (VERDICT r9
-    * #8): true iff this session already wrote the artifacts for `dir`
-    * AND every path still exists on disk. The session-conf flag alone
+    * #8): true iff this session already wrote the artifact for `dir`
+    * AND its path still exists on disk. The session-conf flag alone
     * trusts the filesystem blindly — an operator wiping the scratch
     * root mid-session (disk pressure, tmp cleaner, manual rm) used to
     * turn every later trunk read into an opaque PATH_NOT_FOUND; with
@@ -269,16 +297,16 @@ object Tables {
     * two SF dirs (a multi-SF verify loop in one JVM) re-tokenize and
     * rewrite the full trunk on every switch even though the other
     * dir's artifacts were still valid on disk. */
-  def scratchReady(spark: SparkSession, flagKey: String, dir: String,
-                   paths: Seq[String]): Boolean =
-    spark.conf.getOption(dirFlag(flagKey, dir)).contains("true") && paths.forall { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
+  private def scratchReady(spark: SparkSession, flagKey: String, dir: String,
+                           path: String): Boolean =
+    spark.conf.getOption(dirFlag(flagKey, dir)).contains("true") && {
+      val hp = new org.apache.hadoop.fs.Path(path)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
 
-  /** Record that the artifacts guarded by `flagKey` are written for
+  /** Record that the artifact guarded by `flagKey` is written for
     * `dir` — the setter half of [[scratchReady]]'s dir-keyed flag. */
-  def scratchMark(spark: SparkSession, flagKey: String, dir: String): Unit =
+  private def scratchMark(spark: SparkSession, flagKey: String, dir: String): Unit =
     spark.conf.set(dirFlag(flagKey, dir), "true")
 
   /** Reset a guard (test/chaos tooling): the next consumer rebuilds. */

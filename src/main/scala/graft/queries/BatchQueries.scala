@@ -579,7 +579,17 @@ object BatchQueries {
     * plain filtered aggregate — the layout must not change results.
     * The write is one-time per corpus dir (same guard as
     * [[ExtensionQueries.bucketedJoin]]); steady-state runs only read. */
-  def partitionedScan(spark: SparkSession, dir: String): DataFrame = {
+  def partitionedScan(spark: SparkSession, dir: String): DataFrame =
+    eventsByType(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .agg(
+        count(lit(1)).as("n_events"),
+        Det.moneySum(col("value")).as("total_value"),
+        countDistinct("user_id").as("n_users"))
+
+  /** The events copy partitioned by `event_type` that [[partitionedScan]]
+    * and [[dppPrune]] read, written once per corpus dir. */
+  private def eventsByType(spark: SparkSession, dir: String): DataFrame = {
     val path = s"${Tables.scratchDir}/events_by_type"
     if (spark.conf.getOption("graft.partitioned.dir").forall(_ != dir)) {
       Tables(spark, dir, "events")
@@ -587,11 +597,6 @@ object BatchQueries {
       spark.conf.set("graft.partitioned.dir", dir)
     }
     spark.read.parquet(path)
-      .filter(col("event_type") === "purchase")
-      .agg(
-        count(lit(1)).as("n_events"),
-        Det.moneySum(col("value")).as("total_value"),
-        countDistinct("user_id").as("n_users"))
   }
 
   val partitionedScanSql: String =
@@ -1207,12 +1212,7 @@ object BatchQueries {
     * share) is a driver-side loop literal, so the dim filter is a
     * pushable literal predicate and DPP stays eligible. */
   def dppPrune(spark: SparkSession, dir: String): DataFrame = {
-    val factPath = s"${Tables.scratchDir}/events_by_type"
-    if (spark.conf.getOption("graft.partitioned.dir").forall(_ != dir)) {
-      Tables(spark, dir, "events")
-        .write.mode("overwrite").partitionBy("event_type").parquet(factPath)
-      spark.conf.set("graft.partitioned.dir", dir)
-    }
+    val fact = eventsByType(spark, dir)
     val dimPath = s"${Tables.scratchDir}/event_type_dim"
     if (spark.conf.getOption("graft.typedim.dir").forall(_ != dir)) {
       Tables(spark, dir, "events")
@@ -1222,7 +1222,6 @@ object BatchQueries {
     }
     // loop literal (the ipfRaking precedent): one scalar to the driver
     val thresh = Tables(spark, dir, "events").count() / 5
-    val fact = spark.read.parquet(factPath)
     val dim = spark.read.parquet(dimPath)
       .filter(col("cnt") >= thresh).select("event_type")
     fact.join(dim, Seq("event_type"))

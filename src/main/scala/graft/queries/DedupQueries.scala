@@ -286,21 +286,6 @@ object DedupQueries {
     expand(verified, groups)
   }
 
-  /** Test hook: proves the trunk write is one-time ([[trunk]]). */
-  private[graft] var trunkWrites = 0
-
-  /** Test hook: proves the groups write is one-time ([[groupsScratch]]). */
-  private[graft] var groupsWrites = 0
-
-  /** Scratch subpaths are keyed by (session, data dir): the data-dir
-    * hash (ADVICE r5) keeps two sessions over DIFFERENT dirs from
-    * overwriting parquet the other's lazy DataFrame still reads, and
-    * the session token (VERDICT r6 #5) closes the remaining race —
-    * two CONCURRENT sessions over the SAME dir now write disjoint
-    * paths instead of racing a mid-write read on one. The token is
-    * minted once per session and pinned in the session-scoped SQL
-    * conf (same scoping as the one-time-write guard flags, so a
-    * session's guard can never point at another session's files). */
   /** Reliable-checkpoint root for iterative fixpoints (VERDICT r9
     * #4): one-time `setCheckpointDir` under the scratch root — in
     * production this is the durable cluster filesystem; the contract
@@ -313,9 +298,6 @@ object DedupQueries {
       sc.setCheckpointDir(s"${Tables.scratchDir}/checkpoints")
   }
 
-  private[graft] def scratchKey(spark: SparkSession, dir: String): String =
-    Tables.sessionKey(spark, dir)
-
   /** One-time materialization of the stage-1 exact-duplicate collapse
     * per (session, data dir) — the method-INDEPENDENT prefix shared by
     * the MinHash trunk AND the SimHash family. The two families must
@@ -324,23 +306,14 @@ object DedupQueries {
     * content-hash collapse is pure preprocessing: identical for both,
     * one full-text scan + one shuffle, so whichever family runs first
     * pays it once and the other does a plain columnar read. Separate
-    * guard from [[trunk]] so q_simhash_pairs running first does NOT
+    * keyed pin from [[trunk]] so q_simhash_pairs running first does NOT
     * drag in the minhash signature/verify stages it doesn't need. */
-  private def groupsScratch(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${Tables.scratchDir}/dedupgroups-${scratchKey(spark, dir)}/groups.parquet"
-    if (!Tables.scratchReady(spark, "graft.dedupgroups.dir", dir, Seq(path))) {
-      graft.StageTimes.timed("dedup.groups") {
-        groupsOf(Tables(spark, dir, "documents")).write.mode("overwrite").parquet(path)
-      }
-      groupsWrites += 1
-      graft.Tables.scratchMark(spark, "graft.dedupgroups.dir", dir)
-    }
-    spark.read.parquet(path)
-  }
+  private def groupsScratch(spark: SparkSession, dir: String): DataFrame =
+    Tables.pinKeyed(spark, "dedupgroups", dir)(groupsOf(Tables(spark, dir, "documents")))
 
   /** One-time materialization of the shared MinHash trunk per (session,
-    * data dir) — the guarded scratch-write pattern of
-    * [[ExtensionQueries.bucketedJoin]], applied to VERDICT r4 #1:
+    * data dir) — a [[Tables.pinKeyed]] chain (verified pairs, then the
+    * component labels built from their read), applied to VERDICT r4 #1:
     * [[minhashLsh]], [[dedupKeep]] and [[dedupClustersFull]] all need
     * (groups, verified rep pairs), and each independently re-running
     * collapse→signature→band→prefilter→verify was 11.7s of the 51.3s
@@ -354,28 +327,16 @@ object DedupQueries {
     * consumer (pair audit, keep-decision, clustering) reads it, rather
     * than re-hashing the corpus per consumer. */
   private def trunk(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val base = s"${Tables.scratchDir}/deduptrunk-${scratchKey(spark, dir)}"
     val groups = groupsScratch(spark, dir) // shared stage-1 collapse
-    if (!Tables.scratchReady(spark, "graft.deduptrunk.dir", dir,
-        Seq(s"$base/verified.parquet", s"$base/labels.parquet"))) {
-      val verified = verifiedFromGroups(Tables(spark, dir, "documents"), groups)
-      graft.StageTimes.timed("dedup.verify-agg") {
-        verified.write.mode("overwrite").parquet(s"$base/verified.parquet")
-      }
-      // the connected-component labels ride in the trunk too: both
-      // clustering consumers (keep-mode, full clusters) need the same
-      // fixpoint over the same pair graph — run it once, over the
-      // just-written parquet (flat lineage for the round jobs)
-      graft.StageTimes.timed("dedup.components") {
-        components(spark.read.parquet(s"$base/verified.parquet").select("d1", "d2"))
-          .write.mode("overwrite").parquet(s"$base/labels.parquet")
-      }
-      trunkWrites += 1
-      graft.Tables.scratchMark(spark, "graft.deduptrunk.dir", dir)
-    }
-    (groups,
-      spark.read.parquet(s"$base/verified.parquet"),
-      spark.read.parquet(s"$base/labels.parquet"))
+    val verified = Tables.pinKeyed(spark, "deduptrunk-verified", dir)(
+      verifiedFromGroups(Tables(spark, dir, "documents"), groups))
+    // the connected-component labels ride in the trunk too: both
+    // clustering consumers (keep-mode, full clusters) need the same
+    // fixpoint over the same pair graph — run it once, over the
+    // just-written parquet (flat lineage for the round jobs)
+    val labels = Tables.pinKeyed(spark, "deduptrunk-labels", dir)(
+      components(verified.select("d1", "d2")))
+    (groups, verified, labels)
   }
 
   /** Eagerly materializes the shared scratch artifacts (stage-1 collapse
@@ -384,7 +345,7 @@ object DedupQueries {
     * can pay the one-time family-shared writes under its own label
     * instead of whichever dedup query happens to run first absorbing
     * 10+s of trunk cost by iteration luck. Idempotent: a second call in
-    * the same session is a no-op (guarded by the session conf flags). */
+    * the same session only reads the pins ([[Tables.pinKeyed]]). */
   def materializeTrunk(spark: SparkSession, dir: String): Unit = {
     trunk(spark, dir)
     ()

@@ -3170,14 +3170,7 @@ object ExtensionQueries {
     // per-user feature frame is corpus-keyed (one row per user) and
     // read four times — durable scratch parquet, not executor-pinned
     // (the VERDICT r8 #2 pattern)
-    val path =
-      s"${Tables.scratchDir}/rfm-${DedupQueries.scratchKey(spark, dir)}/features.parquet"
-    if (!graft.Tables.scratchReady(spark, "graft.rfm.dir", dir, Seq(path))) {
-      rfmFeaturesOf(Tables(spark, dir, "events"))
-        .write.mode("overwrite").parquet(path)
-      graft.Tables.scratchMark(spark, "graft.rfm.dir", dir)
-    }
-    rfmFinish(spark.read.parquet(path))
+    rfmFinish(Tables.pinKeyed(spark, "rfm", dir)(rfmFeaturesOf(Tables(spark, dir, "events"))))
   }
 
   private[graft] def rfmSegmentOf(events: DataFrame): DataFrame =
@@ -6872,19 +6865,14 @@ object ExtensionQueries {
     * PageRank integer ring — scores in exact 10¹² units, each
     * renormalize is `raw·SCALE div Σraw` in decimal(38,0), truncating
     * identically in both engines. */
-  def hits(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${graft.Tables.scratchDir}/purchedges-${DedupQueries.scratchKey(spark, dir)}/edges.parquet"
-    if (!graft.Tables.scratchReady(spark, "graft.purchedges.dir", dir, Seq(path))) {
+  def hits(spark: SparkSession, dir: String): DataFrame =
+    hitsOnEdges(Tables.pinKeyed(spark, "purchedges", dir) {
       Tables(spark, dir, "lineitem")
         .join(Tables(spark, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
-        .write.mode("overwrite").parquet(path)
-      graft.Tables.scratchMark(spark, "graft.purchedges.dir", dir)
-    }
-    hitsOnEdges(spark.read.parquet(path))
-  }
+    })
 
   private[graft] def hitsOnEdges(edges: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"

@@ -1265,9 +1265,7 @@ object SimilarityQueries {
     // the scored relation is corpus-proportional (NQueries·n rows) and
     // feeds two consumers — durable scratch parquet, not an
     // executor-pinned localCheckpoint (the VERDICT r8 #2 pattern)
-    val path =
-      s"${Tables.scratchDir}/hardneg-${DedupQueries.scratchKey(spark, dir)}/scored.parquet"
-    if (!Tables.scratchReady(spark, "graft.hardneg.dir", dir, Seq(path))) {
+    val scored = Tables.pinKeyed(spark, "hardneg", dir) {
       val emb = Tables(spark, dir, "embeddings")
       val q = emb.filter(col("vec_id") < NQueries).limit(NQueries)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -1277,10 +1275,7 @@ object SimilarityQueries {
       withCos(broadcast(q).crossJoin(c))
         .filter(col("qid") =!= col("cid"))
         .select(col("qid"), col("qlabel"), col("cid"), col("clabel"), col("cos"))
-        .write.mode("overwrite").parquet(path)
-      graft.Tables.scratchMark(spark, "graft.hardneg.dir", dir)
     }
-    val scored = spark.read.parquet(path)
     val pos = scored.filter(col("qlabel") === col("clabel"))
       .groupBy("qid").agg(max("cos").as("pos_cos"))
     val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cid"))
@@ -1344,14 +1339,8 @@ object SimilarityQueries {
     // 2×[[PcaIters]]+2 times — durable scratch parquet, not an
     // executor-pinned localCheckpoint (VERDICT r8 #2): survives
     // executor loss and spills to storage instead of memory
-    val path =
-      s"${Tables.scratchDir}/pca-${DedupQueries.scratchKey(spark, dir)}/centered.parquet"
-    if (!Tables.scratchReady(spark, "graft.pca.dir", dir, Seq(path))) {
-      pcaCenteredOf(Tables(spark, dir, "embeddings"))
-        .write.mode("overwrite").parquet(path)
-      graft.Tables.scratchMark(spark, "graft.pca.dir", dir)
-    }
-    pcaFromCentered(spark.read.parquet(path))
+    pcaFromCentered(Tables.pinKeyed(spark, "pca", dir)(
+      pcaCenteredOf(Tables(spark, dir, "embeddings"))))
   }
 
   /** Mean-centering stage of [[pcaPower]]: exploded COO form with the
@@ -1444,9 +1433,6 @@ object SimilarityQueries {
   def rrfFuse(spark: SparkSession, dir: String): DataFrame =
     rrfFuseRanked(Tables(spark, dir, "embeddings"), TextQueries.bm25(spark, dir))
 
-  private[graft] def rrfFuseOn(docs: DataFrame, emb: DataFrame): DataFrame =
-    rrfFuseRanked(emb, TextQueries.bm25Of(docs))
-
   private def rrfFuseRanked(emb: DataFrame, ranked: DataFrame): DataFrame = {
     val shortlist = ranked
       .select(col("doc_id"), col("score").as("bm25"))
@@ -1524,9 +1510,6 @@ object SimilarityQueries {
   def interleaving(spark: SparkSession, dir: String): DataFrame =
     interleavingRanked(
       Tables(spark, dir, "embeddings"), TextQueries.bm25(spark, dir))
-
-  private[graft] def interleavingOn(docs: DataFrame, emb: DataFrame): DataFrame =
-    interleavingRanked(emb, TextQueries.bm25Of(docs))
 
   private def interleavingRanked(emb: DataFrame, ranked: DataFrame): DataFrame = {
     val shortlist = ranked.select(col("doc_id"), col("score").as("bm25"))
@@ -2134,16 +2117,9 @@ object SimilarityQueries {
     * oracle replays the ENTIRE pipeline and the output is hash-checked
     * end-to-end. Mined pairs keep `score ≥ `[[BtMinScore]] and the
     * per-source argmax (deterministic ties by cid). */
-  def bitextMine(spark: SparkSession, dir: String): DataFrame = {
-    val path =
-      s"${Tables.scratchDir}/bitext-${DedupQueries.scratchKey(spark, dir)}/scored.parquet"
-    if (!Tables.scratchReady(spark, "graft.bitext.dir", dir, Seq(path))) {
-      bitextScored(Tables(spark, dir, "documents"), Tables(spark, dir, "embeddings"))
-        .write.mode("overwrite").parquet(path)
-      graft.Tables.scratchMark(spark, "graft.bitext.dir", dir)
-    }
-    bitextFinish(spark.read.parquet(path))
-  }
+  def bitextMine(spark: SparkSession, dir: String): DataFrame =
+    bitextFinish(Tables.pinKeyed(spark, "bitext", dir)(
+      bitextScored(Tables(spark, dir, "documents"), Tables(spark, dir, "embeddings"))))
 
   /** The candidate generation + scoring half of [[bitextMine]]:
     * bipartite sign-LSH banding (en side × non-en side), exact cosine
@@ -2254,23 +2230,15 @@ object SimilarityQueries {
     * iterates over it ([[pageRank]], [[labelProp]]): iterations re-read
     * a flat columnar relation instead of re-planning the LSH+rerank
     * pipeline per round. */
-  private def knnEdgesScratch(spark: SparkSession, dir: String): DataFrame = {
-    val path =
-      s"${Tables.scratchDir}/knnedges-${DedupQueries.scratchKey(spark, dir)}/edges.parquet"
-    if (!Tables.scratchReady(spark, "graft.knnedges.dir", dir, Seq(path))) {
-      // cos and rank ride along for the distance/rank-consuming
-      // readers ([[lof]], the q_knn_graph entry); src/dst-only readers
-      // column-prune both away at the scan. Built via knnGraphOn (the
-      // public knnGraph READS this scratch at the default geometry).
-      graft.StageTimes.timed("graph.knn-edges") {
-        knnGraphOn(Tables(spark, dir, "embeddings"), 8, 5)
-          .select("src", "dst", "cos", "rank")
-          .write.mode("overwrite").parquet(path)
-      }
-      graft.Tables.scratchMark(spark, "graft.knnedges.dir", dir)
+  private def knnEdgesScratch(spark: SparkSession, dir: String): DataFrame =
+    // cos and rank ride along for the distance/rank-consuming readers
+    // ([[lof]], the q_knn_graph entry); src/dst-only readers
+    // column-prune both away at the scan. Built via knnGraphOn (the
+    // public knnGraph READS this trunk at the default geometry).
+    Tables.pinKeyed(spark, "knnedges", dir) {
+      knnGraphOn(Tables(spark, dir, "embeddings"), 8, 5)
+        .select("src", "dst", "cos", "rank")
     }
-    spark.read.parquet(path)
-  }
 
   /** The oriented UNDIRECTED adjacency (low-id → high-id, distinct) of
     * the k-NN graph — ONE (session, dir)-keyed trunk (VERDICT r12 #1:

@@ -1390,11 +1390,8 @@ object TextQueries {
       tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tf").as("cf")))
   }
 
-  /** Test hook: proves the trunk write is one-time per (session, dir). */
-  private[graft] var postingsWrites = 0
-
-  /** One-time guarded scratch-parquet POSTINGS TRUNK per (session,
-    * data dir) — the [[DedupQueries]] trunk pattern applied to VERDICT
+  /** One-time [[Tables.pinKeyed]] POSTINGS TRUNK per (session, data
+    * dir) — tf, then dl and df built from its read — applied to VERDICT
     * r10 #1: [[tfidfTopTerms]], [[bm25]], [[dirichletQl]],
     * [[rocchioPrf]], [[postingsBuild]], [[phraseSearch]] (and the
     * bm25-shortlist consumers [[ragPack]], [[mmrRerank]],
@@ -1409,30 +1406,16 @@ object TextQueries {
     * snapshot on durable storage, and retrieval queries are index
     * seeks, not corpus scans. */
   private[graft] def postingsTrunk(spark: SparkSession, dir: String): PostingsIndex = {
-    val base = s"${Tables.scratchDir}/postings-${DedupQueries.scratchKey(spark, dir)}"
-    val (pTf, pDl, pDf) =
-      (s"$base/tf.parquet", s"$base/dl.parquet", s"$base/df.parquet")
-    if (!Tables.scratchReady(spark, "graft.postings.dir", dir, Seq(pTf, pDl, pDf))) {
-      graft.StageTimes.timed("postings.tf") {
-        postingsOf(Tables(spark, dir, "documents"))
-          .write.mode("overwrite").parquet(pTf)
-      }
-      // dl/df derive from the just-written parquet (flat lineage, and
-      // the positions column prunes away at both scans)
-      val tf = spark.read.parquet(pTf).select("doc_id", "term", "tf")
-      graft.StageTimes.timed("postings.dl") {
-        tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-          .write.mode("overwrite").parquet(pDl)
-      }
-      graft.StageTimes.timed("postings.df") {
-        tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-          .write.mode("overwrite").parquet(pDf)
-      }
-      postingsWrites += 1
-      graft.Tables.scratchMark(spark, "graft.postings.dir", dir)
-    }
-    PostingsIndex(spark.read.parquet(pTf),
-      spark.read.parquet(pDl), spark.read.parquet(pDf))
+    val tfPos = Tables.pinKeyed(spark, "postings-tf", dir)(
+      postingsOf(Tables(spark, dir, "documents")))
+    // dl/df derive from the written tf parquet (flat lineage, and the
+    // positions column prunes away at both scans)
+    val tf = tfPos.select("doc_id", "term", "tf")
+    PostingsIndex(tfPos,
+      Tables.pinKeyed(spark, "postings-dl", dir)(
+        tf.groupBy("doc_id").agg(sum("tf").as("dl"))),
+      Tables.pinKeyed(spark, "postings-df", dir)(
+        tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tf").as("cf"))))
   }
 
   /** Eager trunk materialization for deterministic bench cost
@@ -4110,9 +4093,6 @@ object TextQueries {
   def ragPack(spark: SparkSession, dir: String): DataFrame =
     ragPackRanked(Tables(spark, dir, "documents"), bm25(spark, dir))
 
-  private[graft] def ragPackOf(docs: DataFrame): DataFrame =
-    ragPackRanked(docs, bm25Of(docs))
-
   private def ragPackRanked(docs: DataFrame, ranked: DataFrame): DataFrame = {
     val ntok = docs.select(col("doc_id"),
       size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
@@ -4843,9 +4823,6 @@ object TextQueries {
   def jmQl(spark: SparkSession, dir: String): DataFrame =
     jmQlOnPostings(postingsTrunk(spark, dir))
 
-  private[graft] def jmQlOf(docs: DataFrame): DataFrame =
-    jmQlOnPostings(postingsLocalOf(docs))
-
   private def jmQlOnPostings(p: PostingsIndex): DataFrame = {
     val tf = p.tf.select("doc_id", "term", "tf")
     val dl = p.dl
@@ -4920,9 +4897,6 @@ object TextQueries {
     * term counts, never cross-document. Exact integers end-to-end. */
   def termProximity(spark: SparkSession, dir: String): DataFrame =
     termProximityOnPostings(postingsTrunk(spark, dir))
-
-  private[graft] def termProximityOf(docs: DataFrame): DataFrame =
-    termProximityOnPostings(postingsLocalOf(docs))
 
   private def termProximityOnPostings(p: PostingsIndex): DataFrame = {
     val q2 = p.df.orderBy(desc("df"), asc("term")).limit(2)
@@ -7205,28 +7179,20 @@ object TextQueries {
   }
 
   /** One-time materialization of the fingerprint relation per
-    * (session, data dir) — the guarded scratch-write pattern of
-    * [[DedupQueries]]: `fps` is corpus-sized and feeds three
+    * (session, data dir) — a [[Tables.pinKeyed]] chain (fps, then the
+    * cut built from its read): `fps` is corpus-sized and feeds three
     * consumers, so it rides durable scratch parquet, not lineage
     * recompute (VERDICT r9 #1a). */
-  private def winnowCutScratch(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${Tables.scratchDir}/winnowfps-${DedupQueries.scratchKey(spark, dir)}"
-    if (!Tables.scratchReady(spark, "graft.winnowfps.dir", dir,
-        Seq(s"$base/fps.parquet", s"$base/cut.parquet"))) {
-      // two-step write: the raw kernel relation lands first so the cut
-      // derives from flat columnar reads (kernel runs exactly once),
-      // then the CUT relation — the one all three report consumers
-      // read — lands next to it. At 100 TB this is the production
-      // layout: fingerprint index + its boilerplate-culled view are
-      // corpus snapshot artifacts, not per-query lineage.
-      winnowFpsKernelOf(Tables(spark, dir, "documents"))
-        .write.mode("overwrite").parquet(s"$base/fps.parquet")
-      winnowCutOf(spark.read.parquet(s"$base/fps.parquet"))
-        .write.mode("overwrite").parquet(s"$base/cut.parquet")
-      graft.Tables.scratchMark(spark, "graft.winnowfps.dir", dir)
-    }
-    spark.read.parquet(s"$base/cut.parquet")
-  }
+  private def winnowCutScratch(spark: SparkSession, dir: String): DataFrame =
+    // two-step write: the raw kernel relation lands first so the cut
+    // derives from flat columnar reads (kernel runs exactly once),
+    // then the CUT relation — the one all three report consumers
+    // read — lands next to it. At 100 TB this is the production
+    // layout: fingerprint index + its boilerplate-culled view are
+    // corpus snapshot artifacts, not per-query lineage.
+    Tables.pinKeyed(spark, "winnowfps-cut", dir)(
+      winnowCutOf(Tables.pinKeyed(spark, "winnowfps", dir)(
+        winnowFpsKernelOf(Tables(spark, dir, "documents")))))
 
   /** The MOSS over-frequent-fingerprint cut: fingerprints whose
     * document frequency exceeds max(4, 1% of docs) are dropped via a

@@ -42,10 +42,6 @@ object StreamJobs {
   def runningCounts(events: DataFrame): DataFrame =
     events.groupBy("event_type").agg(count(lit(1)).as("cnt"))
 
-  /** A13 per user (reference user-id counter, `Part_B.py:116-134`). */
-  def runningUserCounts(events: DataFrame): DataFrame =
-    events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
-
   /** Extension — event-time tumbling window with watermark: late data
     * beyond the watermark is dropped and window state is evictable,
     * which is what makes the aggregation runnable forever. */

@@ -296,18 +296,21 @@ class DedupSimilaritySpec extends SparkSpec {
     // VERDICT r4 #1: q_minhash_lsh / q_dedup_keep / q_dedup_clusters_full
     // share the collapse→signature→band→prefilter→verify trunk; the
     // first caller writes it to scratch parquet, the others must do a
-    // pure read — proven two ways: the write counter stays at 1, and
+    // pure read — proven two ways: the build count stays at 1, and
     // the scratch files' mtimes are byte-for-byte untouched.
-    graft.Tables.scratchUnmark(spark, "graft.deduptrunk.dir", sfDir)
-    graft.Tables.scratchUnmark(spark, "graft.dedupgroups.dir", sfDir)
-    DedupQueries.trunkWrites = 0
-    DedupQueries.groupsWrites = 0
+    val trunkTags = Seq("deduptrunk-verified", "deduptrunk-labels")
+    (trunkTags :+ "dedupgroups").foreach(t =>
+      graft.Tables.scratchUnmark(spark, s"graft.pin.$t", sfDir))
+    def trunkWrites = trunkTags.map(graft.Tables.pinBuilds)
+    def groupsWrites = graft.Tables.pinBuilds("dedupgroups")
+    val (trunk1, groups1) = (trunkWrites.map(_ + 1), groupsWrites + 1)
     DedupQueries.minhashLsh(spark, sfDir).count()
-    assert(DedupQueries.trunkWrites == 1, "first consumer must write the trunk")
-    assert(DedupQueries.groupsWrites == 1, "first consumer must write the stage-1 collapse")
-    val key = DedupQueries.scratchKey(spark, sfDir)
-    val scratch = new java.io.File(s"${graft.Tables.scratchDir}/deduptrunk-$key")
-    def mtimes: Map[String, Long] = scratch.listFiles
+    assert(trunkWrites == trunk1, "first consumer must write the trunk")
+    assert(groupsWrites == groups1, "first consumer must write the stage-1 collapse")
+    val key = graft.Tables.sessionKey(spark, sfDir)
+    val trunkDirs = trunkTags.map(t =>
+      new java.io.File(s"${graft.Tables.scratchDir}/pins-keyed/$t-$key.parquet"))
+    def mtimes: Map[String, Long] = trunkDirs
       .flatMap(d => Option(d.listFiles).getOrElse(Array.empty[java.io.File]))
       .map(f => f.getPath -> f.lastModified).toMap
     val before = mtimes
@@ -317,8 +320,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // the SimHash family shares ONLY the stage-1 collapse (ADVICE r5):
     // it must neither rewrite the groups parquet nor touch the trunk
     DedupQueries.simhashPairs(spark, sfDir).count()
-    assert(DedupQueries.trunkWrites == 1, "a later consumer re-ran the trunk write")
-    assert(DedupQueries.groupsWrites == 1, "a later consumer re-ran the stage-1 collapse write")
+    assert(trunkWrites == trunk1, "a later consumer re-ran the trunk write")
+    assert(groupsWrites == groups1, "a later consumer re-ran the stage-1 collapse write")
     assert(mtimes == before, "a later consumer rewrote the scratch files")
   }
 

@@ -208,7 +208,7 @@ class Round10Spec extends SparkSpec {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(); ()
     }
-    val scratch = new java.io.File(Tables.scratchDir)
+    val scratch = new java.io.File(s"${Tables.scratchDir}/pins-keyed")
     assert(scratch.exists, "trunks must have been written")
     scratch.listFiles()
       .filter(f => f.getName.startsWith("deduptrunk-") ||

@@ -60,16 +60,41 @@ class Round14Spec extends SparkSpec {
     assert(childTok.get != myTok, "child JVM minted the SAME session token")
     assert(childMd5.get == myMd5, "child JVM's answer diverges")
     assert(out.contains("PINPROBE_DONE=1"))
-    // the child's exit hook reclaimed ITS scratch (token dir + keyed
-    // trunks carrying its token) — and left OURS alone
+    // the child's exit hook reclaimed ITS scratch (token dir + every
+    // entry anywhere under the scratch root carrying its token) — and
+    // left OURS alone
     val pins = new java.io.File(s"${Tables.scratchDir}/pins")
     assert(!new java.io.File(pins, childTok.get).exists(),
       "child token dir survived its shutdown hook")
-    val keyed = new java.io.File(s"${Tables.scratchDir}/pins-keyed")
-    val leftovers = Option(keyed.list()).getOrElse(Array.empty[String])
-      .filter(_.contains(s"-${childTok.get}-"))
-    assert(leftovers.isEmpty, s"child keyed pins survived: ${leftovers.toSeq}")
+    def tokenEntries(f: java.io.File): Seq[String] =
+      Option(f.listFiles()).toSeq.flatten.flatMap { c =>
+        if (c.getName.contains(s"-${childTok.get}-")) Seq(c.getPath) else tokenEntries(c)
+      }
+    val leftovers = tokenEntries(new java.io.File(Tables.scratchDir))
+    assert(leftovers.isEmpty, s"child scratch entries survived: $leftovers")
     // our own artifacts still answer bit-identically after the child died
     assert(rows(SimilarityQueries.sssp(spark, sfDir)) == here)
+  }
+
+  test("two threads needing one unbuilt keyed trunk build it once and answer as serial runs") {
+    val serialPr = rows(SimilarityQueries.pageRank(spark, sfDir))
+    val serialLp = rows(SimilarityQueries.labelProp(spark, sfDir))
+    Tables.scratchUnmark(spark, "graft.pin.knnedges", sfDir)
+    val builds = Tables.pinBuilds("knnedges")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    def submit(f: => Seq[String]) =
+      pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+        def call(): Seq[String] = { go.await(); f }
+      })
+    try {
+      val pr = submit(rows(SimilarityQueries.pageRank(spark, sfDir)))
+      val lp = submit(rows(SimilarityQueries.labelProp(spark, sfDir)))
+      go.countDown()
+      assert(pr.get(10, TimeUnit.MINUTES) == serialPr, "concurrent pageRank diverges")
+      assert(lp.get(10, TimeUnit.MINUTES) == serialLp, "concurrent labelProp diverges")
+    } finally pool.shutdownNow()
+    assert(Tables.pinBuilds("knnedges") == builds + 1,
+      "the knnedges trunk must be built exactly once for both threads")
   }
 }

@@ -48,17 +48,16 @@ class Round7Spec extends SparkSpec {
   }
 
   test("dedup scratch keys are session-scoped: concurrent sessions on one dir write disjoint paths") {
-    import graft.queries.DedupQueries
     val s2 = spark.newSession()
-    val k1 = DedupQueries.scratchKey(spark, sfDir)
-    val k2 = DedupQueries.scratchKey(s2, sfDir)
+    val k1 = Tables.sessionKey(spark, sfDir)
+    val k2 = Tables.sessionKey(s2, sfDir)
     assert(k1 != k2,
       "two sessions over the SAME dir must not share a scratch path (VERDICT r6 #5)")
     // stable within a session (the one-time-write guard depends on it)
-    assert(k1 == DedupQueries.scratchKey(spark, sfDir))
-    assert(k2 == DedupQueries.scratchKey(s2, sfDir))
+    assert(k1 == Tables.sessionKey(spark, sfDir))
+    assert(k2 == Tables.sessionKey(s2, sfDir))
     // still keyed by dir: different dirs stay disjoint within a session
-    assert(k1 != DedupQueries.scratchKey(spark, "/root/testdata/sf0.01"))
+    assert(k1 != Tables.sessionKey(spark, s"$sfDir-other"))
   }
 
   test("dup rate by source: accounting identity holds and totals cover the corpus") {

@@ -341,7 +341,7 @@ class Round9Spec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     // first consumer pays the write
     graft.queries.SimilarityQueries.pageRank(spark, sfDir).count()
-    val dirGlob = Files.list(Paths.get(graft.Tables.scratchDir)).iterator().asScala
+    val dirGlob = Files.list(Paths.get(graft.Tables.scratchDir, "pins-keyed")).iterator().asScala
       .filter(_.getFileName.toString.startsWith("knnedges-")).toSeq
     assert(dirGlob.nonEmpty, "scratch edges parquet missing after pageRank")
     def mtimes(): Map[String, Long] = dirGlob.flatMap { d =>
