@@ -4,21 +4,38 @@ driver's DuckDB compare). NOT part of the engine — the engine is pure
 Scala/Spark; this script only replicates the driver-side check loop so we
 catch oracle mismatches before the round gate.
 
-Usage: python3 scripts/check.py [sfdir] [outdir]
+Usage: python3 scripts/check.py [sfdir] [outdir] [key,key,...]
 (Expects `sbt "runMain graft.Verify <sfdir> <outdir>"` to have been run.)
+The optional third argument restricts the check to those keys, the same
+comma-separated filter graft.Verify takes.
+
+DuckDB runs with a memory limit of half the host's RAM and spills under
+target/duckdb_tmp, so an oracle that needs more memory fails as
+`FAIL <key>: oracle error ...` instead of getting the script killed.
 """
 import json, sys, glob, os
 import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+keys = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 con = duckdb.connect()
+con.sql(f"SET memory_limit = '{host_mb // 2}MB'")
+con.sql(f"SET temp_directory = '{os.path.join(repo, 'target', 'duckdb_tmp')}'")
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if keys is not None:
+    unknown = keys - oracle.keys() - {
+        os.path.basename(p.rstrip("/")) for p in glob.glob(f"{outdir}/*/")}
+    if unknown:
+        sys.exit(f"unknown key(s): {', '.join(sorted(unknown))}")
+    oracle = {k: v for k, v in oracle.items() if k in keys}
 fails = 0
 for name in sorted(oracle):
     files = glob.glob(f"{outdir}/{name}/*.parquet")
@@ -56,7 +73,7 @@ for name in sorted(oracle):
 # rows-only queries (no oracle): just confirm they produced output
 for p in sorted(glob.glob(f"{outdir}/*/")):
     name = os.path.basename(p.rstrip("/"))
-    if name not in oracle:
+    if name not in oracle and (keys is None or name in keys):
         n = con.sql(f"SELECT count(*) FROM read_parquet('{p}*.parquet')").fetchone()[0]
         print(f"rows {name}: {n} rows (no oracle)")
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loader for the driver corpus (`TESTDATA.md`).
   *
@@ -76,9 +76,13 @@ object Tables {
           s"(found: ${df.columns.mkString(", ")}) — update graft.Tables/FIXTURES.md for the new layout")
     }
 
-  /** Scratch dir for sink round-trips (CSV/DDL). Kept under target/ so it
-    * is git-ignored and never collides with the read-only corpus. */
-  val scratchDir = "/root/repo/target/scratch"
+  /** Scratch dir for sink round-trips (CSV/DDL) and pins: the
+    * `SPARK_GRAFT_SCRATCH` environment variable if set, else a dir under
+    * the checkout's target/, which is git-ignored and never collides
+    * with the read-only corpus. */
+  val scratchDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+      java.nio.file.Paths.get("target", "scratch").toAbsolutePath.toString)
 
   /** Pin a derived relation to scratch parquet (VERDICT r10 #2): the
     * 100 TB-safe replacement for `localCheckpoint` on CORPUS-LINEAR
@@ -133,12 +137,12 @@ object Tables {
     spark.read.parquet(path)
   }
 
-  /** Round-state pin sequence for iterative operators (sssp/kcore/
+  /** Round-state pin sequence for iterative operators (sssp/ktruss/
     * dbscan/…): level i of a chain writes `pins/<tag>-l<i>.parquet` —
     * deterministic, so re-invocations overwrite the previous run's
     * levels instead of accumulating, and DISTINCT per level, so (a) a
     * level's write job never overwrites the predecessor path it reads
-    * and (b) operators whose OUTPUT references every round (the kcore
+    * and (b) operators whose OUTPUT references every round (the ktruss
     * per-round profile) read each level's own file at action time.
     * Storage is bounded by the unroll depth (≤ 12 everywhere). Also
     * fixes ADVICE r11: accumulate-style loops (betweenness) pin only
@@ -170,7 +174,11 @@ object Tables {
     * the previous one's read. A `build` may itself call `pinKeyed` for
     * a trunk it derives from; such nesting follows the derivation
     * order (undadj → knnedges), so the build locks are taken in one
-    * order and never deadlock. */
+    * order and never deadlock.
+    *
+    * Only the first read of a trunk infers its schema: parquet schema
+    * inference runs a Spark job, so later reads pass the remembered
+    * schema and a query built over a ready trunk starts no job. */
   def pinKeyed(spark: SparkSession, tag: String, dir: String)(build: => DataFrame): DataFrame = {
     val key = s"$tag-${sessionKey(spark, dir)}"
     val path = s"$scratchDir/pins-keyed/$key.parquet"
@@ -186,11 +194,15 @@ object Tables {
         pinBuildCounts.computeIfAbsent(tag, _ => new AtomicInteger).incrementAndGet()
         scratchMark(spark, s"graft.pin.$tag", dir)
       }
+      if (!pinSchemas.containsKey(key))
+        pinSchemas.put(key, spark.read.parquet(path).schema)
     }
-    spark.read.parquet(path)
+    spark.read.schema(pinSchemas.get(key)).parquet(path)
   }
 
   private val pinLocks = new ConcurrentHashMap[String, Object]()
+
+  private val pinSchemas = new ConcurrentHashMap[String, StructType]()
 
   private val pinBuildCounts = new ConcurrentHashMap[String, AtomicInteger]()
 

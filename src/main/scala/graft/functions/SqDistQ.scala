@@ -27,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   * Degenerate-input note (the cosine_sim precedent): unequal lengths
   * fold over the shorter prefix, where `zip_with` would null-pad — the
   * corpus guarantees fixed-dimension vectors, so the divergence cannot
-  * trigger; ragged inputs must be length-filtered first. */
+  * trigger; ragged inputs must be length-filtered first. A NULL
+  * element inside the folded prefix makes the result NULL, as it does
+  * in the `aggregate(zip_with(...))` form. */
 case class SqDistQ(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -45,6 +47,13 @@ case class SqDistQ(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sqdist_q"
 
+  private def containsNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, cn) => cn
+    case _ => false
+  }
+  override def nullable: Boolean =
+    left.nullable || right.nullable || containsNull(left) || containsNull(right)
+
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -52,6 +61,7 @@ case class SqDistQ(left: Expression, right: Expression)
     var acc = 0L
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val d = x.getLong(i) - y.getLong(i)
       acc += d * d
       i += 1
@@ -65,10 +75,19 @@ case class SqDistQ(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       val d = ctx.freshName("d")
+      // element null checks only for array types that can hold NULL;
+      // the corpus's quantized vectors cannot, so their loop is unchanged
+      val nullAt = Seq(left -> x, right -> y).collect {
+        case (e, v) if containsNull(e) => s"$v.isNullAt($i)"
+      }
+      val nullCheck =
+        if (nullAt.isEmpty) ""
+        else s"if (${nullAt.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
          |long $acc = 0L;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $nullCheck
          |  long $d = $x.getLong($i) - $y.getLong($i);
          |  $acc += $d * $d;
          |}

@@ -2719,7 +2719,9 @@ object SimilarityQueries {
       // NOT pinned (measured, r15): the predecessor's two uses live in
       // one main-plan action where ReusedExchange dedupes them — a
       // per-round pin write regressed this key 0.97s → 1.50s when
-      // tried (see kcore's note for the boundary rule)
+      // tried. A round pin pays only when the duplicate use crosses a
+      // boundary exchange reuse cannot span, such as the broadcast
+      // subquery of spectralRadius's per-round ax
     }
     emb.filter(col("vec_id") % LpHideMod === 0)
       .join(labs, "vec_id")
@@ -3492,57 +3494,72 @@ object SimilarityQueries {
     * [[semanticClusters]] tells you WHO clusters, the core profile
     * tells you how much of the space is densely supported at all).
     *
-    * Scale shape: each round is two degree-filtered SEMI joins of the
-    * surviving edge relation against the keep-set — both keyed on the
-    * node id the edges already hash by; the edge relation shrinks
-    * monotonically, so round cost decays. Rounds are UNROLLED to a
-    * fixed count (identically in the oracle) rather than looped to
-    * fixpoint — the deterministic-replay trade both engines share;
-    * the per-round profile makes non-convergence visible instead of
+    * Scale shape: the state is the oriented edge rows `(v, u, life)`,
+    * both orientations of every undirected edge, where `life` is the
+    * last round the edge survives. Round r counts v's rows with
+    * `life = r − 1` in a window partitioned by v (v's degree), swaps
+    * each row to `(u, v)` carrying that count as the other endpoint's
+    * degree — the round's only exchange — and counts again in a window
+    * on the new v; the edge lives on iff both degrees reach k. The next
+    * round's first window sits on the same partitioning, so the
+    * unrolled rounds cost one exchange each plus the first, and every
+    * round reads its predecessor once: the plan grows linearly, needs
+    * no per-round pin and starts no job at construction. A lost
+    * shuffle output is recomputed from that linear lineage. The
+    * profile is two aggregates over the final rows — per node, its
+    * max life and its rows alive at each round; then one global sum,
+    * unpivoted to a row per round. Rounds are UNROLLED to a fixed
+    * count (identically in the oracle) rather than looped to fixpoint
+    * — the deterministic-replay trade both engines share; the
+    * per-round profile makes non-convergence visible instead of
     * silent. Pure integer counts, no rounding anywhere. */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreOnUnd(undAdjScratch(spark, dir)) // shared keyed trunk (r13)
 
   private[graft] def kcoreOnEdges(edges: DataFrame): DataFrame =
-    kcoreOnUnd(undOf(edges)
-      .transform(Tables.scratchPin(_, "kcore-e0"))) // k·|V|, shrinks every round — durable pin (r11)
+    kcoreOnUnd(undOf(edges))
 
   private def kcoreOnUnd(und: DataFrame): DataFrame = {
-    var edg = und
-    def stats(round: Int, e: DataFrame): DataFrame =
-      e.select(explode(array(col("src"), col("dst"))).as("v"))
-        .agg(lit(round.toLong).as("round"),
-          coalesce(count_distinct(col("v")), lit(0L)).as("n_nodes"),
-          (count(lit(1)) / 2).cast("long").as("n_edges"))
-    var out = stats(0, edg)
-    val pc = new Tables.PinChain("kcore-round")
+    val byV = Window.partitionBy("v")
+    def liveDegree(r: Int) =
+      count(when(col("life") === r - 1, 1)).over(byV)
+    var rows = und
+      .select(explode(array(
+        struct(col("src").as("v"), col("dst").as("u")),
+        struct(col("dst").as("v"), col("src").as("u")))).as("e"))
+      .select(col("e.v"), col("e.u"), lit(0).as("life"))
     for (r <- 1 to KcoreRounds) {
-      val deg = edg.select(explode(array(col("src"), col("dst"))).as("v"))
-        .groupBy("v").agg(count(lit(1)).as("d"))
-      // NOT pinned (measured, r15): the survivor set feeds two
-      // semi-joins, but both sit in the MAIN plan, so ReusedExchange
-      // dedupes the degree aggregation's shuffle — a per-round pin
-      // write costs more than it saves (1.8s → 3.0s when tried). The
-      // spectral-radius double-pass was different: its duplicate
-      // crossed a broadcast-SUBQUERY boundary, which exchange reuse
-      // cannot span.
-      val keep = deg.filter(col("d") >= KcoreK).select("v")
-      edg = edg
-        .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .transform(pc.next) // edge round state — per-level deterministic pin (r12): the profile reads EVERY round's file at action time
-      out = out.union(stats(r, edg))
+      rows = rows
+        .withColumn("du", liveDegree(r))
+        // the swap: du is now the degree of the row's other endpoint
+        .select(col("u").as("v"), col("v").as("u"), col("life"), col("du"))
+        .select(col("v"), col("u"),
+          when(col("life") === r - 1 && col("du") >= KcoreK &&
+            liveDegree(r) >= KcoreK, lit(r)).otherwise(col("life")).as("life"))
     }
-    out.orderBy("round")
+    // a node is in round r's graph iff one of its edges lives to r
+    val rounds = 0 to KcoreRounds
+    val perNode = rows.groupBy("v").agg(max("life").as("top"),
+      rounds.map(r => count(when(col("life") >= r, 1)).as(s"rows$r")): _*)
+    val sums = rounds.flatMap(r => Seq(
+      count(when(col("top") >= r, 1)).as(s"n$r"),
+      coalesce(sum(s"rows$r"), lit(0L)).as(s"m$r")))
+    perNode.agg(sums.head, sums.tail: _*)
+      .select(explode(array(rounds.map(r => struct(
+        lit(r.toLong).as("round"),
+        col(s"n$r").as("n_nodes"),
+        (col(s"m$r") / 2).cast("long").as("n_edges"))): _*)).as("p"))
+      .select("p.*")
+      .orderBy("round")
   }
 
   val kcoreSql: String = {
     // AS MATERIALIZED throughout: each round references its
     // predecessor 3× and the profile re-reads every e_r — inlining
     // would re-expand the LSH pipeline exponentially (observed as a
-    // file-handle blowup); materialization makes the unroll linear,
-    // mirroring the Spark side's per-round localCheckpoint
+    // file-handle blowup); materialization makes the unroll linear.
+    // The Spark side needs no materialization: its recurrence reads
+    // each round once and derives the whole profile from the last one
     val rounds = (1 to KcoreRounds).map { r =>
       val prev = s"e${r - 1}"
       s"""k$r AS MATERIALIZED (SELECT v FROM (

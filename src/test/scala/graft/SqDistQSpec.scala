@@ -67,4 +67,36 @@ class SqDistQSpec extends SparkSpec {
       assert(on == off)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
+
+  test("a NULL element makes sqdist_q NULL, as in the HOF form, codegen'd and interpreted") {
+    SqDistQ.register(spark)
+    // spark.range keeps the arrays out of constant folding, so the
+    // projection really runs the generated (or interpreted) code
+    val df = spark.range(6).select(col("id"),
+      expr("array(id, IF(id % 2 = 0, NULL, id), 3L)").as("x"),
+      expr("array(1L, 2L, IF(id = 3, NULL, id))").as("y"))
+      .select(col("id"), expr("sqdist_q(x, y)").as("gen"),
+        expr("aggregate(zip_with(x, y, (a, b) -> a - b), 0L, " +
+          "(acc, d) -> acc + d * d)").as("hof"))
+    assert(df.schema("gen").nullable)
+    def rows() = df.orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq
+    val want = Seq(0L -> None, 1L -> Some(5L), 2L -> None, 3L -> None,
+      4L -> None, 5L -> Some(29L))
+    val codegen = rows()
+    assert(codegen.map(r => r._1 -> r._2) === want)
+    assert(codegen.forall(r => r._2 == r._3), "codegen'd sqdist_q diverged from the HOF form")
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(rows() === codegen, "interpreted sqdist_q diverged from codegen")
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // arrays that cannot hold NULL keep the expression non-nullable
+    assert(!spark.range(1).select(expr("sqdist_q(array(id), array(id))").as("d"))
+      .schema("d").nullable)
+  }
 }
