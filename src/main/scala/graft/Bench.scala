@@ -6,14 +6,13 @@ object Bench {
   /** One-line driver-channel JSON. Contract (unit-tested, BenchJsonSpec):
     * 3-decimal per-query seconds keep the line compact — with 67+
     * queries the 9-decimal form grew past ~2.4 KB and the driver's
-    * capture tail truncated the line's HEAD, killing the parse
-    * (BENCH_r04 was "parsed": null); ms precision is all the channel
-    * needs. metric/value come AFTER the queries map, so if a capture
-    * window still truncates from the front, the headline fields
-    * survive at the tail end of the line. Failures (-1 markers) are
-    * excluded from the total rather than silently shrinking it; they
-    * remain visible per-query. Keys are emitted in sorted order so two
-    * captures of the same surface are byte-comparable (VERDICT r6 #2). */
+    * capture tail truncated the line's HEAD, killing the parse; ms
+    * precision is all the channel needs. metric/value come AFTER the
+    * queries map, so if a capture window still truncates from the
+    * front, the headline fields survive at the tail end of the line.
+    * Failures (-1 markers) are excluded from the total rather than
+    * silently shrinking it; they remain visible per-query. Keys are emitted in sorted order so two
+    * captures of the same surface are byte-comparable. */
   private def r3(v: Double): String =
     if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -24,19 +23,19 @@ object Bench {
     s"""{"unit":"sec","queries":$qs,"sf":"$sfDir","metric":"total","value":${r3(total)}}"""
   }
 
-  /** Per-query MEDIAN of the successful reps (VERDICT r8 #4: one-rep
-    * captures forced every cross-round comparison to adjudicate ~2×
-    * same-code host spread). With 3 reps the middle value sheds a
-    * single contended rep in either direction; -1 only if every rep
-    * failed. For an even success count the UPPER middle is taken —
-    * conservative, never reports a best-case. */
+  /** Per-query MEDIAN of the successful reps: a one-rep capture leaves
+    * every comparison to adjudicate ~2× same-code host spread. With 3
+    * reps the middle value sheds a single contended rep in either
+    * direction; -1 only if every rep failed. For an even success count
+    * the UPPER middle is taken — conservative, never reports a
+    * best-case. */
   private[graft] def median(ts: Seq[Double]): Double = {
     val ok = ts.filter(_ >= 0).sorted
     if (ok.isEmpty) -1.0 else ok(ok.size / 2)
   }
 
-  /** Contention-window flag (VERDICT r14 #1): the r14 driver capture
-    * ran through a ~20-minute host-contention window that blew 13
+  /** Contention-window flag: one driver capture ran through a
+    * ~20-minute host-contention window that blew 13
     * alphabetically-contiguous keys on ALL THREE reps — a per-key
     * median cannot shed a bad WINDOW, only a bad rep. The defense is a
     * cheap fixed canary probe interleaved through the pass: a key is
@@ -92,97 +91,79 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The one-time family trunks, in build order. Each is timed under its
+    * own `_setup_<name>` label, so no query absorbs family-shared cost by
+    * iteration luck and two runs attribute a trunk to the same label. */
+  private[graft] val setups: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    // collapse → signatures → banding → verify → component labels
+    "dedup_trunk" -> queries.DedupQueries.materializeTrunk,
+    // one corpus tokenize pass shared by tfidf/bm25/dirichlet/rocchio/
+    // postings/phrase and the shortlist consumers, plus the df.cf
+    // vocabulary riders (bpe_train, self_bleu's unigram tier)
+    "postings_trunk" -> queries.TextQueries.materializePostingsTrunk,
+    // the graph family's adjacency trunks: und (oriented) + sym +
+    // weighted, and the knn-edges pin q_knn_graph reads directly
+    "graph_adj" -> queries.SimilarityQueries.materializeGraphAdj,
+    // mutual edges + component labels, read by semantic_clusters and
+    // modularity
+    "semclust" -> queries.SimilarityQueries.materializeSemClust,
+    // the seeded-centrality family's forward-BFS trunk
+    "seeded_bfs" -> queries.SimilarityQueries.materializeSeededBfs,
+    // verified set-similarity pairs: setsim_prefix and lsh_recall's
+    // exact ground-truth tier read them
+    "setsim" -> queries.TextQueries.materializeSetsim,
+    // the trainer family's feature/teacher trunks: ~25 classifier/eval
+    // keys plus ppmi_embed
+    "lr_feats" -> queries.TextQueries.materializeLrFeats,
+    // the media family's verified-pair trunk
+    "media_pairs" -> queries.MultimodalQueries.materializeMediaPairs,
+    // the clustering-evaluation family's fitted Lloyd assignment
+    "km_fit" -> queries.SimilarityQueries.materializeKmFit,
+    // the basket-mining family's items + supported-pairs trunk
+    "baskets" -> queries.ExtensionQueries.materializeBaskets)
+
+  /** Keyed-trunk tags whose build count rose between two
+    * [[Tables.pinBuildSnapshot]]s, sorted. */
+  private[graft] def builtBetween(before: Map[String, Int],
+      after: Map[String, Int]): Seq[String] =
+    after.collect { case (tag, n) if n > before.getOrElse(tag, 0) => tag }.toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the driver's documented environment (local[32],
     // shuffle.partitions=32); SPARK_GRAFT_CPUS overrides for scaling
     // experiments
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle-partition override for scale rehearsals (VERDICT r13 #3):
-    // the driver contract pins 32 at sf0.1; at 10×+ data the same 32
-    // makes the heaviest shuffles (the dedup trunk's shingle→signature
+    // shuffle-partition override for scale rehearsals: the driver
+    // contract pins 32 at sf0.1; at 10×+ data the same 32 makes the
+    // heaviest shuffles (the dedup trunk's shingle→signature
     // aggregation) spill — the knob a real cluster turns with data size
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
-    // SPARK_GRAFT_AQE=false captures an adaptive-off run (VERDICT r8
-    // #8: prove no plan silently depends on AQE's runtime re-planning)
+    // SPARK_GRAFT_AQE=false captures an adaptive-off run, proving no
+    // plan silently depends on AQE's runtime re-planning
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // reliable-checkpoint round state is deleted once its RDD is
-      // GC'd (ADVICE r10: checkpoint files otherwise accumulate
-      // unboundedly over a long session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // GC dead-session scratch leftovers only — live concurrent
-    // siblings' pins are untouched (VERDICT r12 "wrong" #1)
-    Tables.sweepStaleScratch(spark)
-    // untimed JVM/codegen/IO warmup (no benchmark query runs early):
-    // a shuffle, a parquet read and a tiny sort initialize the executor
-    // pools and JIT paths that would otherwise inflate the first query
-    spark.range(100000).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
-      .count().orderBy("k").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // comma-separated key filter for targeted re-medians (VERDICT r10
-    // #4 flow) — absent means the full surface
+    val spark = GraftSession(cpus.toInt, Some(shuffle.toInt), aqe.toBoolean)
+    GraftSession.warmUp(spark, sfDir)
+    // comma-separated key filter for targeted re-medians — absent means
+    // the full surface
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // one-time family trunks, each timed under its own `_setup_*`
-    // label so no query absorbs family-shared cost by iteration luck
-    // and two consecutive runs attribute the trunk to the same key
-    // (VERDICT r6 #2). Under SPARK_GRAFT_BENCH_ONLY a setup runs only
-    // when its label is listed (ADVICE r15: targeted re-medians were
-    // paying ~30s of unrelated one-time builds); full runs are
-    // unchanged — every setup runs, in the same order as r15, plus the
-    // new `_setup_semclust`. A selected key whose trunk was skipped
-    // builds it lazily inside rep 1; the 3-rep median sheds that rep.
-    val setups = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def setupBlock(label: String)(f: => Unit): Unit =
-      if (only.forall(_.contains(label))) {
-        val t0 = System.nanoTime()
-        try { f; setups(label) = (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label FAILED: ${e.getMessage}")
-          setups(label) = -1.0
-        }
+    // Under SPARK_GRAFT_BENCH_ONLY a setup runs only when its label is
+    // listed, so a targeted re-median does not pay ~30s of unrelated
+    // one-time builds. A selected key whose trunk was skipped builds it
+    // inside rep 1 (reported on stderr); the 3-rep median sheds that rep.
+    val setupTimes = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    for ((name, build) <- setups; label = s"_setup_$name" if only.forall(_.contains(label))) {
+      val t0 = System.nanoTime()
+      try { build(spark, sfDir); setupTimes(label) = (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label FAILED: ${e.getMessage}")
+        setupTimes(label) = -1.0
       }
-    // dedup family: collapse → signatures → banding → verify →
-    // component labels
-    setupBlock("_setup_dedup_trunk") { queries.DedupQueries.materializeTrunk(spark, sfDir) }
-    // retrieval family (r11): one corpus tokenize pass shared by
-    // tfidf/bm25/dirichlet/rocchio/postings/phrase + shortlist
-    // consumers — and, since r16, the df.cf vocabulary riders
-    // (bpe_train, self_bleu's unigram tier)
-    setupBlock("_setup_postings_trunk") { queries.TextQueries.materializePostingsTrunk(spark, sfDir) }
-    // the whole graph family's shared adjacency trunks (VERDICT r12
-    // #1): und (oriented) + sym + weighted — includes the knn-edges
-    // scratch build (which q_knn_graph reads directly since r16)
-    setupBlock("_setup_graph_adj") { queries.SimilarityQueries.materializeGraphAdj(spark, sfDir) }
-    // the semantic-cluster trunk (r16): mutual edges + component
-    // labels, read by semantic_clusters AND modularity
-    setupBlock("_setup_semclust") { queries.SimilarityQueries.materializeSemClust(spark, sfDir) }
-    // the seeded-centrality family's forward-BFS trunk (VERDICT r11 #2)
-    setupBlock("_setup_seeded_bfs") { queries.SimilarityQueries.materializeSeededBfs(spark, sfDir) }
-    // the verified set-similarity pair trunk (r16): setsim_prefix AND
-    // lsh_recall's exact ground-truth tier read it
-    setupBlock("_setup_setsim") { queries.TextQueries.materializeSetsim(spark, sfDir) }
-    // the trainer family's shared feature/teacher trunks (r15):
-    // ~25 classifier/eval keys plus, since r16, ppmi_embed
-    setupBlock("_setup_lr_feats") { queries.TextQueries.materializeLrFeats(spark, sfDir) }
-    // the media family's verified-pair trunk (r15)
-    setupBlock("_setup_media_pairs") { queries.MultimodalQueries.materializeMediaPairs(spark, sfDir) }
-    // the clustering-evaluation family's fitted Lloyd assignment (r15)
-    setupBlock("_setup_km_fit") { queries.SimilarityQueries.materializeKmFit(spark, sfDir) }
-    // the basket-mining family's items + supported-pairs trunk (r15)
-    setupBlock("_setup_baskets") { queries.ExtensionQueries.materializeBaskets(spark, sfDir) }
-    val setup: Map[String, Double] = setups.toMap
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    }
+    val setup: Map[String, Double] = setupTimes.toMap
+    GraftSession.dropCached(spark)
     // sorted key order: per-query timings comparable across rounds —
     // map-iteration order previously decided which query followed which
     // (and, pre-trunk-split, who paid shared costs)
@@ -192,7 +173,8 @@ object Bench {
     def measure(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Seq[Double] =
-      (1 to reps).map { _ =>
+      (1 to reps).map { rep =>
+        val built = Tables.pinBuildSnapshot()
         val t0 = System.nanoTime()
         // a failed query must NOT masquerade as a fast one: record -1
         // (and say so on stderr) instead of its time-to-crash
@@ -202,16 +184,15 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0
           }
-        // cached/checkpointed blocks must not carry across queries: each
-        // measurement starts cold so numbers are stable and independent.
-        // clearCache only drops SQL-cached relations; localCheckpoint RDD
-        // blocks (dedup/recommender/text queries) otherwise linger until
-        // GC, accumulating executor memory across the run (ADVICE r2).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        builtBetween(built, Tables.pinBuildSnapshot()).foreach { tag =>
+          System.err.println(s"[bench] $name built trunk $tag inside rep $rep")
+        }
+        // each measurement starts cold, so numbers are stable and
+        // independent
+        GraftSession.dropCached(spark)
         sec
       }
-    // canary cadence/threshold knobs (VERDICT r14 #1); a probe costs
+    // canary cadence/threshold knobs; a probe costs
     // ~0.15s, so every-5 adds ~3% to a full-surface pass
     val canEvery = sys.env.getOrElse("SPARK_GRAFT_BENCH_CANARY_EVERY", "5").toInt
     // 1.4, strictly TIGHTER than the 1.5× normal band the chaos check
@@ -259,8 +240,8 @@ object Bench {
         n -> rerunMed.get(n).fold(median(ts))(betterMedian(median(ts), _))
       } + ("_canary" -> median(probes.toSeq)) // the run's typical host regime
     // all raw reps + the canary timeline to a side artifact so the
-    // spread AND the host regime under it are auditable (VERDICT r14
-    // #1: every capture carries its own contention trace)
+    // spread AND the host regime under it are auditable: every capture
+    // carries its own contention trace
     val repsJson = (repResults.map { case (k, ts) =>
       "\"" + k + "\":[" + ts.map(r3).mkString(",") + "]"
     } ++ reruns.map { case (k, ts) =>
@@ -273,8 +254,8 @@ object Bench {
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench_reps.json"), repsJson + "\n")
     val json = renderJson(results, sfDir)
-    // three channels so the driver can't miss it (BENCH_r02 was still
-    // "parsed": null): stdout (sbt-wrapped with [info]), the file at
+    // three channels so a parser can't miss it: stdout (sbt-wrapped
+    // with [info]), the file at
     // `target/bench.json` (documented in README), and — emitted LAST,
     // after spark.stop() so no log line can trail it — bare JSON on
     // stderr, which sbt passes through un-prefixed

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * so scan pushdown (PushedFilters/ReadSchema), join strategy
   * (BroadcastHashJoin vs SortMergeJoin), top-k (TakeOrderedAndProject)
@@ -10,18 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // reliable-checkpoint round state is deleted once its RDD is
-      // GC'd (ADVICE r10: checkpoint files otherwise accumulate
-      // unboundedly over a long session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.sweepStaleScratch(spark) // GC dead-session scratch only (r13: live siblings untouched)
+    val spark = GraftSession(4)
     val names =
       if (args.nonEmpty) args.toSeq
       else Seq("q_topk_group_count", "q_project_filter", "q_join_agg_by_dim",

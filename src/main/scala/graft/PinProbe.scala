@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Second-process probe for the pin-lifecycle chaos test (VERDICT r13
-  * #7): Round13Spec proves two isolated SESSIONS in one JVM don't
-  * collide; the r12 finding was about two PROCESSES sharing the
-  * scratch root. Round14Spec forks this main as a real second JVM
+/** Second-process probe for the pin-lifecycle chaos test: Round13Spec
+  * proves two isolated SESSIONS in one JVM don't collide, but two
+  * PROCESSES sharing the scratch root are a separate failure mode.
+  * Round14Spec forks this main as a real second JVM
   * while the suite's own session runs the same graph query, and
   * asserts both finish green with distinct token dirs and identical
   * answers.
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object PinProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4)
     val rows = queries.SimilarityQueries.sssp(spark, sfDir)
       .collect().map(_.toString).sorted.mkString("|")
     val md5 = java.security.MessageDigest.getInstance("MD5")

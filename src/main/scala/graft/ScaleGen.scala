@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** sf1 generator for the scale rehearsal (VERDICT r13 #3): derive a
+/** sf1 generator for the scale rehearsal: derive a
   * ~10× corpus from the driver's sf0.1 parquet WITHOUT touching
   * /root/testdata (read-only), so the trunk families' wall-time
   * scaling can be measured instead of argued from plan shape.
@@ -58,12 +57,7 @@ object ScaleGen {
       println(s"[scalegen] $out already generated, skipping")
       return
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val lower = "abcdefghijklmnopqrstuvwxyz"

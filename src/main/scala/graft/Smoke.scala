@@ -1,24 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: builds a session,
   * runs [[SparkEntry.entry]] on sf0.001 and prints the row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // reliable-checkpoint round state is deleted once its RDD is
-      // GC'd (ADVICE r10: checkpoint files otherwise accumulate
-      // unboundedly over a long session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.sweepStaleScratch(spark) // GC dead-session scratch only (r13: live siblings untouched)
+    val spark = GraftSession(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,35 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Sub-stage timing probe for the one-time trunk builds behind the
-  * `_setup_*` bench labels (guide §1 "measure first" / VERDICT r15
-  * "next round" #1: the trunks' INTERNAL stages had never been timed
-  * individually). Runs each materialize* in dependency order on a
-  * fresh session and prints the [[StageTimes]] breakdown after each,
-  * so the dominant stage of each setup label is visible. Timings are
-  * observational (nanoTime around writes that already happen);
-  * nothing in the bench/verify contract changes. Usage:
-  * `runMain graft.StageProbe [sfDir]`. */
+  * `_setup_*` bench labels: a setup label's total says nothing about
+  * which of its internal stages dominates. Runs each [[Bench.setups]]
+  * builder in bench order on a fresh session and prints the
+  * [[StageTimes]] breakdown after each. Timings are observational
+  * (nanoTime around writes that already happen); nothing in the
+  * bench/verify contract changes. Usage:
+  * `runMain graft.StageProbe [sfDir] [setupName ...] [q_key ...]`. */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.find(_.startsWith("/"))
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.sweepStaleScratch(spark)
-    // same untimed warmup as graft.Bench so the first stage is not
-    // charged for JIT/executor-pool initialization
-    spark.range(100000).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
-      .count().orderBy("k").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // so the first stage is not charged for JIT/executor-pool start-up
+    GraftSession.warmUp(spark, sfDir)
 
     def probe(label: String)(f: => Unit): Unit = {
       StageTimes.reset()
@@ -47,21 +32,12 @@ object StageProbe {
     // setup families to probe (default: all)
     val queryArgs = args.toSeq.filter(_.startsWith("q_"))
     val setupArgs = args.toSeq.filterNot(a => a.startsWith("q_") || a.startsWith("/"))
-    def want(n: String): Boolean =
-      (queryArgs.isEmpty && setupArgs.isEmpty) || setupArgs.contains(n)
-    if (want("dedup_trunk")) probe("dedup_trunk") { queries.DedupQueries.materializeTrunk(spark, sfDir) }
-    if (want("postings_trunk")) probe("postings_trunk") { queries.TextQueries.materializePostingsTrunk(spark, sfDir) }
-    if (want("graph_adj")) probe("graph_adj") { queries.SimilarityQueries.materializeGraphAdj(spark, sfDir) }
-    if (want("semclust")) probe("semclust") { queries.SimilarityQueries.materializeSemClust(spark, sfDir) }
-    if (want("seeded_bfs")) probe("seeded_bfs") { queries.SimilarityQueries.materializeSeededBfs(spark, sfDir) }
-    if (want("lr_feats")) probe("lr_feats") { queries.TextQueries.materializeLrFeats(spark, sfDir) }
-    if (want("media_pairs")) probe("media_pairs") { queries.MultimodalQueries.materializeMediaPairs(spark, sfDir) }
-    if (want("km_fit")) probe("km_fit") { queries.SimilarityQueries.materializeKmFit(spark, sfDir) }
-    if (want("baskets")) probe("baskets") { queries.ExtensionQueries.materializeBaskets(spark, sfDir) }
+    for ((name, build) <- Bench.setups
+         if (queryArgs.isEmpty && setupArgs.isEmpty) || setupArgs.contains(name))
+      probe(name) { build(spark, sfDir) }
     queryArgs.foreach { q =>
       probe(q) { SparkEntry.queries(q)(spark, sfDir).count(); () }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.dropCached(spark)
     }
     spark.stop()
   }

@@ -211,6 +211,12 @@ object Tables {
   private[graft] def pinBuilds(tag: String): Int =
     Option(pinBuildCounts.get(tag)).fold(0)(_.get)
 
+  /** [[pinBuilds]] for every tag built so far in this JVM. */
+  private[graft] def pinBuildSnapshot(): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    pinBuildCounts.asScala.map { case (t, n) => t -> n.get }.toMap
+  }
+
   /** Session-scoped scratch key: the random session token (so two
     * sessions sharing the scratch root never collide) × a
     * collision-resistant digest of the data-dir path (ADVICE r12: the

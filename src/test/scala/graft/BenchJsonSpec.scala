@@ -82,6 +82,14 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(Bench.betterMedian(-1.0, -1.0) == -1.0)
   }
 
+  test("builtBetween: only tags whose build count rose, sorted") {
+    val before = Map("undadj" -> 1, "postings-tf" -> 2)
+    val after = Map("undadj" -> 1, "postings-tf" -> 3, "knnedges" -> 1, "baskets" -> 1)
+    assert(Bench.builtBetween(before, after) == Seq("baskets", "knnedges", "postings-tf"))
+    assert(Bench.builtBetween(after, after).isEmpty)
+    assert(Bench.builtBetween(Map.empty, Map.empty).isEmpty)
+  }
+
   test("query keys are emitted in sorted order — byte-comparable captures") {
     val keys = "\"(q_[a-z0-9_]+)\":".r.findAllMatchIn(json).map(_.group(1)).toSeq
     assert(keys == keys.sorted, "renderJson must sort keys (VERDICT r6 #2)")

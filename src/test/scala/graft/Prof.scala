@@ -1,40 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query profiler: `runMain graft.Prof q_a q_b ...` times the
   * named [[SparkEntry.queries]] entries (default: the dedup pair) on
   * `SPARK_GRAFT_SF_DIR` under the same session config as [[Bench]],
   * with `SPARK_GRAFT_REPS` repetitions each — the iteration loop for
-  * plan/perf work without paying for the full 55-query bench. */
+  * plan/perf work without paying for the full bench. */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val names = if (args.nonEmpty) args.toSeq else Seq("q_minhash_lsh", "q_simhash_pairs")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // reliable-checkpoint round state is deleted once its RDD is
-      // GC'd (ADVICE r10: checkpoint files otherwise accumulate
-      // unboundedly over a long session)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.sweepStaleScratch(spark) // GC dead-session scratch only (r13: live siblings untouched)
-    spark.range(100000).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
-      .count().orderBy("k").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val spark = GraftSession(cpus.toInt)
+    GraftSession.warmUp(spark, sfDir)
     for (r <- 1 to reps; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[prof] rep$r $name%-24s $sec%7.2fs rows=$n")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.dropCached(spark)
     }
     spark.stop()
   }
