@@ -3173,9 +3173,6 @@ object ExtensionQueries {
     rfmFinish(Tables.pinKeyed(spark, "rfm", dir)(rfmFeaturesOf(Tables(spark, dir, "events"))))
   }
 
-  private[graft] def rfmSegmentOf(events: DataFrame): DataFrame =
-    rfmFinish(rfmFeaturesOf(events))
-
   /** Per-user exact-integer RFM features (recency hours, frequency,
     * monetary cents + whole-dollar coarsening). */
   private[graft] def rfmFeaturesOf(events: DataFrame): DataFrame = {

@@ -848,8 +848,6 @@ object MultimodalQueries {
   // a junk chunk inserted before `data` so the walk is actually
   // exercised on the happy path.
 
-  private val WavHeaderLen = 44 // RIFF(12) + fmt(24) + data hdr(8)
-
   /** Decoded WAV stats (or the error lane). */
   case class WavDecoded(
       media_id: Long, status: String,

@@ -2203,33 +2203,11 @@ object SimilarityQueries {
   private val PrIters = 5
   private val PrScale = 1000000000000L // 1e12: PageRank mass units
 
-  /** PAGERANK centrality over the [[knnGraph]] edge set — the
-    * graph-authority score a curation pipeline uses to pick canonical
-    * representatives and surface hub documents (Page et al. 1999,
-    * d = 0.85, [[PrIters]] fixed iterations).
-    *
-    * Scale shape: the classic BSP loop as repeated join-aggregate —
-    * each iteration is edges ⋈ p on src (co-partitioned on the scratch
-    * relation's key), one groupBy(dst) with map-side partial sums, one
-    * left join back onto the node set for teleport-only nodes. The cut
-    * edge list (out-degree ≤ k) is materialized ONCE to session-keyed
-    * scratch parquet — [[PrIters]] iterations re-read a flat columnar
-    * relation instead of re-planning the LSH+rerank pipeline, and at
-    * 1000 executors each re-read is a co-partitioned scan, not a
-    * lineage recompute.
-    *
-    * Determinism: all mass arithmetic is exact scaled integers
-    * (p·10¹² units): contrib = p div outdeg, p' = (15·(S div N) +
-    * 85·Σcontrib) div 100 — both engines truncate identically, so the
-    * iteration is bit-reproducible (the ~1e-12-relative mass leak of
-    * truncating division is the price, same in both engines). Dangling
-    * nodes cannot occur: candidates are symmetrized before the top-k
-    * cut, so every node present has out-degree ≥ 1. */
   /** The cut k-NN edge relation, materialized once per session × data
     * dir to scratch parquet — shared by every graph algorithm that
-    * iterates over it ([[pageRank]], [[labelProp]]): iterations re-read
-    * a flat columnar relation instead of re-planning the LSH+rerank
-    * pipeline per round. */
+    * iterates over it ([[pageRank]], [[labelProp]]): each call reads a
+    * flat columnar relation instead of re-planning the LSH+rerank
+    * pipeline. */
   private def knnEdgesScratch(spark: SparkSession, dir: String): DataFrame =
     // cos and rank ride along for the distance/rank-consuming readers
     // ([[lof]], the q_knn_graph entry); src/dst-only readers
@@ -2272,31 +2250,77 @@ object SimilarityQueries {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") < col("dst")).distinct()
 
+  /** PAGERANK centrality over the [[knnGraph]] edge set — the
+    * graph-authority score a curation pipeline uses to pick canonical
+    * representatives and surface hub documents (Page et al. 1999,
+    * d = 0.85, [[PrIters]] fixed iterations).
+    *
+    * Scale shape: a window recurrence over the out-edge rows
+    * `(key = src, dst, o, p)` — `o` is src's out-degree, one `count`
+    * over a src window before the loop; `p` is src's mass. Each round
+    * ([[prRounds]]) explodes every row once, into itself and a vote
+    * row keyed at dst that carries `c = p div o`; one window on key
+    * sums the votes into the out-rows' new `p`, and the vote rows are
+    * dropped. So a round is one exchange, with no join and no
+    * broadcast, and it reads its predecessor once: the plan grows
+    * linearly and nothing is pinned. The result is one aggregate on
+    * the last window's partitioning, which needs no exchange.
+    *
+    * Determinism: all mass arithmetic is exact scaled integers
+    * (p·10¹² units): contrib = p div outdeg, p' = (15·(S div N) +
+    * 85·Σcontrib) div 100 — both engines truncate identically, so the
+    * iteration is bit-reproducible (the ~1e-12-relative mass leak of
+    * truncating division is the price, same in both engines). The
+    * node set is the edges' sources: mass sent to a node with no
+    * out-edge is dropped, as the oracle's node join drops it. In the
+    * k-NN graph that cannot happen — candidates are symmetrized before
+    * the top-k cut, so every node present has out-degree ≥ 1. */
   def pageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOnEdges(knnEdgesScratch(spark, dir))
 
   private[graft] def pageRankOnEdges(edges: DataFrame): DataFrame = {
     import graft.functions.Det
-    val outdeg = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("o"))
-    val nodes = outdeg.select("id")
     // one scalar to the driver (the node count) — the loop literal that
     // sizes the teleport term; everything row-shaped stays distributed
-    val n = nodes.count()
+    val n = edges.select("src").distinct().count()
     val p0 = PrScale / n
-    var p = nodes.withColumn("p", lit(p0))
-    for (_ <- 1 to PrIters) {
-      val contrib = p.join(outdeg, "id")
-        .select(col("id").as("src"), expr("p div o").as("c"))
-      val inflow = edges.join(contrib, "src")
-        .groupBy(col("dst").as("id")).agg(sum("c").as("inflow"))
-      p = nodes.join(inflow, Seq("id"), "left")
-        .select(col("id"),
-          expr(s"(${15L * p0} + 85 * coalesce(inflow, 0L)) div 100").as("p"))
-    }
-    p.select(col("id").as("vec_id"), col("p").as("pr12"),
+    prRounds(prOutRows(edges).withColumn("p", lit(p0)), s"${15L * p0}L")
+      .groupBy(col("key").as("vec_id")).agg(max("p").as("p"))
+      .select(col("vec_id"), col("p").as("pr12"),
         Det.rnd(col("p").cast("double") / PrScale, 9).as("pr"))
       .orderBy("vec_id")
+  }
+
+  /** The out-edge rows `(key = src, dst, o)` of an edge list, `o` the
+    * out-degree of key (duplicate edges count twice, as in the oracle). */
+  private def prOutRows(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("key"), col("dst"))
+      .withColumn("o", count(lit(1)).over(Window.partitionBy("key")))
+
+  /** [[PrIters]] rounds of the mass recurrence over out-edge rows
+    * `(key, dst, o, p, …)`; further columns ride along on the
+    * out-rows. `teleport` is the SQL term for 15× a node's teleport
+    * mass, evaluated on its out-rows: p' = (teleport + 85·inflow)
+    * div 100, inflow the sum of `p div o` over key's in-edges. */
+  private def prRounds(rows: DataFrame, teleport: String): DataFrame = {
+    val byKey = Window.partitionBy("key")
+    val carried = rows.columns.toSeq
+    (1 to PrIters).foldLeft(rows) { (cur, _) =>
+      val self = carried.map(col) ++
+        Seq(lit(null).cast("long").as("c"), lit(false).as("vote"))
+      val vote = carried.map {
+        case "key" => col("dst").as("key")
+        case f => lit(null).cast(cur.schema(f).dataType).as(f)
+      } ++ Seq(expr("p div o").as("c"), lit(true).as("vote"))
+      cur.select(explode(array(struct(self: _*), struct(vote: _*))).as("r"))
+        .select("r.*")
+        .withColumn("inflow", coalesce(sum("c").over(byKey), lit(0L)))
+        .filter(!col("vote"))
+        .select(carried.map {
+          case "p" => expr(s"($teleport + 85 * inflow) div 100").as("p")
+          case f => col(f)
+        }: _*)
+    }
   }
 
   /** DuckDB twin of [[pageRank]]: the identical integer iteration,
@@ -2341,35 +2365,22 @@ object SimilarityQueries {
     * seed set instead of global authority. Top-[[PprTop]] by exact
     * integer mass (vec_id tiebreak) — the expansion candidates.
     *
-    * Scale shape: the pageRank BSP plan against the same shared
-    * scratch edge relation; the teleport branch is a broadcast
-    * 8-row semi-join flag. */
+    * Scale shape: pageRank's recurrence ([[prRounds]]) over the same
+    * shared edge relation. The seed flag is set once on the initial
+    * out-rows and rides along, so the rounds need no join. It is a
+    * `dense_rank` over the source ids: a window with no partition key,
+    * so the out-rows meet in one partition once, before the loop. */
   def pprSeeds(spark: SparkSession, dir: String): DataFrame =
     pprSeedsOnEdges(knnEdgesScratch(spark, dir))
 
   private[graft] def pprSeedsOnEdges(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val outdeg = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("o"))
-    val nodes = outdeg.select("id")
-    val seeds = nodes.orderBy("id").limit(CcSeeds)
-      .select(col("id"), lit(1).as("is_seed")).localCheckpoint() // 8 rows
     val tele = PrScale / CcSeeds
-    var p = nodes.join(broadcast(seeds), Seq("id"), "left")
-      .select(col("id"),
-        when(col("is_seed") === 1, tele).otherwise(0L).as("p"))
-    for (_ <- 1 to PrIters) {
-      val contrib = p.join(outdeg, "id")
-        .select(col("id").as("src"), expr("p div o").as("c"))
-      val inflow = edges.join(contrib, "src")
-        .groupBy(col("dst").as("id")).agg(sum("c").as("inflow"))
-      p = nodes.join(inflow, Seq("id"), "left")
-        .join(broadcast(seeds), Seq("id"), "left")
-        .select(col("id"),
-          expr(s"(15 * CASE WHEN is_seed = 1 THEN ${tele}L ELSE 0L END" +
-            s" + 85 * coalesce(inflow, 0L)) div 100").as("p"))
-    }
-    p.orderBy(desc("p"), asc("id")).limit(PprTop)
+    val rows = prOutRows(edges)
+      .withColumn("seed", dense_rank().over(Window.orderBy("key")) <= CcSeeds)
+      .withColumn("p", when(col("seed"), tele).otherwise(0L))
+    prRounds(rows, s"CASE WHEN seed THEN ${15L * tele}L ELSE 0L END")
+      .groupBy(col("key").as("id")).agg(max("p").as("p"))
+      .orderBy(desc("p"), asc("id")).limit(PprTop)
       .withColumn("rank", row_number().over(Window.orderBy(desc("p"), asc("id"))))
       .select(col("rank"), col("id").as("vec_id"), col("p").as("ppr12"),
         graft.functions.Det.rnd(col("p").cast("double") / PrScale, 9).as("ppr"))
@@ -2670,6 +2681,10 @@ object SimilarityQueries {
 
   private val LpIters  = 3
   private val LpHideMod = 5L // vec_id % 5 == 0 → label hidden (the eval holdout)
+  // labelPropOn's row kinds
+  private val LpNode = 0
+  private val LpEdge = 1
+  private val LpVote = 2
 
   /** LABEL PROPAGATION over the k-NN graph — the semi-supervised step a
     * training pipeline uses to extend a partial labeling to the full
@@ -2691,41 +2706,63 @@ object SimilarityQueries {
     * the operator contract under test is the propagation semantics,
     * which the oracle replays exactly.
     *
-    * Scale: each round is one edges ⋈ labels join (co-partitioned on
-    * the scratch edge relation), one (dst, label) count aggregate, one
-    * row_number over the ≤|labels| per-node vote list, one left join
-    * back — the BSP shape again, [[LpIters]] rounds deep. */
-  def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val edges = knnEdgesScratch(spark, dir)
-    val emb = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("label"))
-    // the corpus label is int32; pin the null branch to the same type
-    // (an untyped/string null would widen lab — and the final
-    // label_pred — to a type the oracle's INTEGER doesn't match)
-    var labs = emb.select(col("vec_id"),
-      when(col("vec_id") % LpHideMod === 0, lit(null).cast("int"))
-        .otherwise(col("label").cast("int")).as("lab"))
+    * Scale: a window recurrence over rows keyed by node, with an
+    * explicit `kind` — [[LpNode]] (the node and its label),
+    * [[LpEdge]] (an out-edge to `dst`) or [[LpVote]]. Every row also
+    * carries `own`, its key node's current label. Each round explodes
+    * every row once: an out-edge row whose `own` is set also emits a
+    * vote `(key = dst, cand = own)`. One window on key then counts
+    * each candidate's votes (a RANGE frame of the candidate's peers,
+    * so no (key, cand) exchange), picks the first candidate by
+    * (count desc, cand asc), freezes the node's label with
+    * `coalesce(lab, best)`, drops the votes and re-spreads `own`. A
+    * round is one exchange, with no join, and it reads its
+    * predecessor once; nothing is pinned. */
+  def labelProp(spark: SparkSession, dir: String): DataFrame =
+    labelPropOn(knnEdgesScratch(spark, dir),
+      Tables(spark, dir, "embeddings").select(col("vec_id"), col("label")))
+
+  /** [[labelProp]] over an edge list `(src, dst)` and the labeled
+    * nodes `(vec_id, label)`. Edges whose source is not a node cast no
+    * vote; votes for a non-node are dropped. */
+  private[graft] def labelPropOn(edges: DataFrame, emb: DataFrame): DataFrame = {
+    val byKey = Window.partitionBy("key")
+    // the corpus label is int32; an untyped null would widen lab, and
+    // label_pred with it, past the oracle's INTEGER
+    val noInt = lit(null).cast("int")
+    def spreadOwn(rows: DataFrame) =
+      rows.withColumn("own", max("lab").over(byKey))
+    val nodes = emb.select(col("vec_id").as("key"), lit(LpNode).as("kind"),
+      lit(null).cast("long").as("dst"),
+      when(col("vec_id") % LpHideMod === 0, noInt)
+        .otherwise(col("label").cast("int")).as("lab"),
+      col("label").cast("int").as("label"))
+    val out = edges.select(col("src").as("key"), lit(LpEdge).as("kind"),
+      col("dst"), noInt.as("lab"), noInt.as("label"))
+    var rows = spreadOwn(nodes.unionByName(out))
     for (_ <- 1 to LpIters) {
-      val w = Window.partitionBy("dst").orderBy(desc("c"), asc("cand"))
-      val votes = edges
-        .join(labs.select(col("vec_id").as("src"), col("lab").as("cand")), "src")
-        .filter(col("cand").isNotNull)
-        .groupBy("dst", "cand").agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("dst").as("vec_id"), col("cand"))
-      labs = labs.join(votes, Seq("vec_id"), "left")
-        .select(col("vec_id"), coalesce(col("lab"), col("cand")).as("lab"))
-      // NOT pinned (measured, r15): the predecessor's two uses live in
-      // one main-plan action where ReusedExchange dedupes them — a
-      // per-round pin write regressed this key 0.97s → 1.50s when
-      // tried. A round pin pays only when the duplicate use crosses a
-      // boundary exchange reuse cannot span, such as the broadcast
-      // subquery of spectralRadius's per-round ax
+      val self = struct(col("key"), col("kind"), col("dst"), col("lab"),
+        col("label"), noInt.as("cand"))
+      val vote = struct(col("dst").as("key"), lit(LpVote).as("kind"),
+        lit(null).cast("long").as("dst"), noInt.as("lab"), noInt.as("label"),
+        col("own").as("cand"))
+      rows = rows
+        .select(explode(
+          when(col("kind") === LpEdge && col("own").isNotNull, array(self, vote))
+            .otherwise(array(self))).as("r"))
+        .select("r.*")
+        .withColumn("c", count(when(col("kind") === LpVote, 1)).over(
+          byKey.orderBy("cand").rangeBetween(Window.currentRow, Window.currentRow)))
+        // non-vote rows have c = 0, so they sort after every vote
+        .withColumn("best", first("cand").over(byKey.orderBy(desc("c"), asc("cand"))))
+        .filter(col("kind") =!= LpVote)
+        .withColumn("lab", when(col("kind") === LpNode,
+          coalesce(col("lab"), col("best"))))
+        .drop("c", "best")
+        .transform(spreadOwn)
     }
-    emb.filter(col("vec_id") % LpHideMod === 0)
-      .join(labs, "vec_id")
-      .select(col("vec_id"), col("label").as("label_true"),
+    rows.filter(col("kind") === LpNode && col("key") % LpHideMod === 0)
+      .select(col("key").as("vec_id"), col("label").as("label_true"),
         col("lab").as("label_pred"),
         (col("lab") === col("label")).cast("int").as("correct"))
       .orderBy("vec_id")
@@ -5686,8 +5723,6 @@ object SimilarityQueries {
        |SELECT cid AS vec_id, CAST(sum(s12) AS BIGINT) AS shap12,
        |       count(*) AS n_anchors
        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private val RptDepth = 2 // levels -> 4 leaves
 
   /** RANDOM-PROJECTION FOREST ANN (median splits — Dasgupta & Freund
     * 2008): the BALANCED counterpart of [[annLsh]]'s sign buckets.
