@@ -9,8 +9,6 @@ object GraftSession {
 
   /** A `local[cores]` session with `shufflePartitions` (default: one per
     * core) and the config every graft query assumes:
-    *  - reliable-checkpoint round state is deleted once its RDD is GC'd,
-    *    so checkpoint files do not pile up over a long session;
     *  - session tz UTC, so [[Tables.apply]]'s NTZ→TZ cast of `events.ts`
     *    keeps the instant bit-for-bit;
     *  - `nanosAsLong`, so a TIMESTAMP(NANOS) corpus column reads at all;
@@ -23,7 +21,6 @@ object GraftSession {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cores).toString)
       .config("spark.sql.adaptive.enabled", adaptive.toString)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

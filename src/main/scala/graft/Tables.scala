@@ -7,25 +7,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Parquet table loader for the driver corpus (`TESTDATA.md`).
+/** Parquet table loader for the driver corpus (`TESTDATA.md`), and
+  * owner of every scratch-parquet pin.
   *
-  * All engine queries read via this single entry point so scan options
-  * stay uniform. Explicit-schema reads are unnecessary for parquet (the
-  * footer IS the schema — deterministic, unlike CSV `inferSchema`).
+  * [[apply]] is the one entry point through which queries read the
+  * corpus, so scan options stay uniform. Parquet needs no explicit read
+  * schema: the footer is the schema.
   *
-  * It also owns the two kinds of scratch-parquet pin under
-  * [[scratchDir]]:
-  *  - transient pins ([[scratchPin]], [[PinChain]]) hold one query's
-  *    round state at `pins/<session token>/<tag>.parquet`. The next
-  *    invocation of the same site overwrites them; the session's
-  *    shutdown hook deletes its whole `pins/<token>` subtree.
-  *  - keyed trunks ([[pinKeyed]]) hold relations that depend only on
-  *    the corpus at a data dir, written once per (session, dir) at
-  *    `pins-keyed/<tag>-<sessionKey>.parquet` and read by every later
-  *    query. The shutdown hook deletes the trunks whose name carries
-  *    its token.
-  * Entries of either kind left by a killed JVM are reaped by
-  * [[sweepStaleScratch]] once they are older than [[SweepAgeMs]].
+  * Relations an operator must materialise go under [[scratchDir]] as
+  * one of two pin kinds:
+  *  - a transient pin ([[scratchPin]], or a [[PinChain]] of them) holds
+  *    one query's round state at `pins/<session token>/<tag>.parquet`.
+  *    Each call site passes its own literal tag; the next invocation of
+  *    the same site overwrites the file, and the session's shutdown
+  *    hook deletes its whole `pins/<token>` subtree.
+  *  - a keyed trunk ([[pinKeyed]]) holds a relation that depends only
+  *    on the corpus at a data dir. It is written once per (session,
+  *    dir) at `pins-keyed/<tag>-<sessionKey>.parquet` and read by every
+  *    later query; the shutdown hook deletes the trunks whose name
+  *    carries the session's token.
+  * Both kinds are read back with the schema of the frame that was
+  * written, so a pin read starts no schema-inference job. Entries of
+  * either kind left by a killed JVM are reaped by [[sweepStaleScratch]]
+  * once they are older than [[SweepAgeMs]].
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -51,8 +55,8 @@ object Tables {
   /** Fail-fast column check (schema from the parquet footer; no data
     * scan). Corpus drift then surfaces as ONE clear load-time error
     * naming the table, instead of dozens of opaque analysis failures
-    * deep inside queries (r7: the events-ts layout drift cost 52
-    * queries before being traced back to the loader). Extra columns
+    * deep inside queries (an events-ts layout drift once failed 52
+    * queries before it was traced back to the loader). Extra columns
     * are tolerated — only the columns queries depend on are pinned. */
   private val expectedColumns: Map[String, Seq[String]] = Map(
     "region"     -> Seq("r_regionkey", "r_name"),
@@ -84,91 +88,66 @@ object Tables {
     sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
       java.nio.file.Paths.get("target", "scratch").toAbsolutePath.toString)
 
-  /** Pin a derived relation to scratch parquet (VERDICT r10 #2): the
-    * 100 TB-safe replacement for `localCheckpoint` on CORPUS-LINEAR
-    * relations (k·|V| edge sets, node tables). `localCheckpoint` pins
-    * blocks on executor storage with no lineage and no replication —
-    * one executor loss aborts the job, and the blocks occupy executor
-    * memory/disk for the session. A scratch-parquet pin computes the
-    * relation exactly once (same as an eager localCheckpoint), gives
-    * every re-read a flat columnar scan, and in production the scratch
-    * root is the durable cluster filesystem, so executor loss costs a
-    * re-read, not the job.
+  /** Pin a derived relation to `pins/<session token>/<tag>.parquet`:
+    * write it once (the write is the only job), then return a flat
+    * columnar read of the file. The read passes `df.schema`, which the
+    * caller already holds, so reading and planning the result starts
+    * no schema-inference job; file sources force every field nullable,
+    * so the read schema equals what inference would have given.
     *
-    * Lifecycle (VERDICT r11 #1 — the nanoTime-unique paths of r11
-    * accumulated 4.6k dirs / 523 MB over one test run with no GC):
-    * the path is DETERMINISTIC per tag and the write mode is
-    * overwrite, so a pin's storage is reclaimed by the next
-    * invocation of the same site instead of leaking forever — total
-    * pin storage is bounded by the number of pin SITES, not by query
-    * count. Tags are unique per call site (audited), and the
-    * harnesses (Bench/Verify/tests) complete each query's action
-    * before constructing the next, so an overwrite never races a
-    * pending read. Loops that re-pin evolving round state use
-    * [[PinChain]] (per-level deterministic paths); relations reusable
-    * across invocations of the same (session, dir) use [[pinKeyed]].
-    * `localCheckpoint` remains the right tool for the genuinely
-    * vocabulary/calendar/shortlist-BOUNDED class.
+    * This is the tool for corpus-linear round state (k·|V| edge sets,
+    * node tables): unlike `localCheckpoint`, which keeps blocks on
+    * executor storage with no lineage, a lost executor costs a re-read,
+    * not the job, and in production the scratch root is the durable
+    * cluster filesystem. `localCheckpoint` stays the tool for relations
+    * bounded by a vocabulary, a calendar or a shortlist.
     *
-    * Cross-process isolation (VERDICT r12 #1/ADVICE r12): the path is
-    * scoped under the SESSION's token dir (`pins/<token>/<tag>`), so
-    * two JVMs — or two isolated sessions in one JVM — sharing the
-    * scratch root can never alias or overwrite each other's live
-    * round state (the r12 layout `pins/<tag>` collided outright). A
-    * shutdown hook reclaims the session's own subtree; storage stays
-    * bounded per session by the number of pin sites.
-    *
-    * Contract waiver (VERDICT r12 "wrong" #6): transient pins carry
-    * no rebuild guard, so an EXTERNAL wipe of the live session's own
-    * token dir between a pin write and its consumer read inside one
-    * query surfaces as a raw PATH_NOT_FOUND. No graft process opens
-    * that window — [[sweepStaleScratch]] only reaps entries older
-    * than [[SweepAgeMs]] and the shutdown hook only deletes its own
-    * token dir — so the intra-query window is out of contract for
-    * external cleaners; wipes BETWEEN queries are absorbed (keyed
-    * trunks rebuild via [[scratchReady]]; transient pins are written
-    * eagerly at construction — chaos-tested). */
+    * Contract:
+    *  - each call site passes its own literal tag; the path is a pure
+    *    function of (session, tag) and the write mode is overwrite, so
+    *    the next invocation of the same site reclaims the previous
+    *    one's file and storage is bounded by the number of pin sites;
+    *  - a harness completes each query's action before constructing
+    *    the next, so an overwrite never races a pending read;
+    *  - two sessions sharing the scratch root never alias, because the
+    *    path sits under the session's token dir;
+    *  - the pin carries no rebuild guard: a wipe of the live session's
+    *    own token dir between a pin write and its read inside one query
+    *    surfaces as PATH_NOT_FOUND. No graft process opens that window
+    *    (the stale sweep only reaps entries older than [[SweepAgeMs]]);
+    *    a wipe between queries is absorbed, because pins are written
+    *    eagerly at construction. */
   def scratchPin(df: DataFrame, tag: String): DataFrame = {
-    val spark = df.sparkSession
-    val path = s"${pinRoot(spark)}/$tag.parquet"
-    StageTimes.timed(s"pin.$tag") {
-      df.write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
+    val path = s"${pinRoot(df.sparkSession)}/$tag.parquet"
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  /** Round-state pin sequence for iterative operators (sssp/ktruss/
-    * dbscan/…): level i of a chain writes `pins/<tag>-l<i>.parquet` —
-    * deterministic, so re-invocations overwrite the previous run's
-    * levels instead of accumulating, and DISTINCT per level, so (a) a
-    * level's write job never overwrites the predecessor path it reads
-    * and (b) operators whose OUTPUT references every round (the ktruss
-    * per-round profile) read each level's own file at action time.
-    * Storage is bounded by the unroll depth (≤ 12 everywhere). Also
-    * fixes ADVICE r11: accumulate-style loops (betweenness) pin only
-    * the new frontier per level and union cheap reads of the level
-    * files, instead of rewriting the whole accumulated relation every
-    * round (O(depth²) write volume → O(depth)). */
+  /** A sequence of [[scratchPin]]s for an iterative operator's round
+    * state: level i is `<tag>-l<i>`. The levels are distinct, so a
+    * level's write never overwrites the predecessor it reads, and an
+    * operator whose output references every round (k-truss's
+    * per-round profile, betweenness's union of frontiers) reads each
+    * level's own file at action time. Storage is bounded by the unroll
+    * depth of the site. */
   final class PinChain(tag: String) {
     private var i = 0
     def next(df: DataFrame): DataFrame = {
       i += 1
-      val path = s"${pinRoot(df.sparkSession)}/$tag-l$i.parquet"
-      StageTimes.timed(s"pinchain.$tag") {
-        df.write.mode("overwrite").parquet(path)
-      }
-      df.sparkSession.read.parquet(path)
+      scratchPin(df, s"$tag-l$i")
     }
   }
 
-  /** One-time guarded pin per (session, data dir) — the trunk for a
+  /** One-time guarded pin per (session, data dir): the trunk for a
     * relation that is a pure function of the corpus at `dir` and is
     * read by every invocation of its query family (the k-NN edges,
-    * the adjacency trunks, the postings index, the dedup trunk): the
-    * first caller computes and writes, every later caller — including
-    * later bench reps and other queries in the family — does a plain
-    * columnar read. The existence check makes a mid-session scratch
-    * wipe a silent rebuild, not a PATH_NOT_FOUND (chaos-tested).
+    * the adjacency trunks, the postings index, the dedup trunk). The
+    * first caller computes and writes it to
+    * `pins-keyed/<tag>-<sessionKey>.parquet`; every later caller,
+    * later bench reps and other queries of the family included, does a
+    * plain columnar read. The existence check makes a mid-session
+    * scratch wipe a silent rebuild, not a PATH_NOT_FOUND
+    * (chaos-tested).
     *
     * A trunk with several outputs is a chain of calls, each built from
     * the previous one's read. A `build` may itself call `pinKeyed` for
@@ -176,9 +155,10 @@ object Tables {
     * order (undadj → knnedges), so the build locks are taken in one
     * order and never deadlock.
     *
-    * Only the first read of a trunk infers its schema: parquet schema
-    * inference runs a Spark job, so later reads pass the remembered
-    * schema and a query built over a ready trunk starts no job. */
+    * The build records the schema of the frame it wrote, and every read
+    * passes it, so a query built over a ready trunk starts no job. A
+    * trunk is flagged ready only by a session that built it in this
+    * JVM, so a ready trunk always has its schema recorded. */
   def pinKeyed(spark: SparkSession, tag: String, dir: String)(build: => DataFrame): DataFrame = {
     val key = s"$tag-${sessionKey(spark, dir)}"
     val path = s"$scratchDir/pins-keyed/$key.parquet"
@@ -188,14 +168,12 @@ object Tables {
     val lock = pinLocks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
       if (!scratchReady(spark, s"graft.pin.$tag", dir, path)) {
-        StageTimes.timed(s"pin.$tag") {
-          build.write.mode("overwrite").parquet(path)
-        }
+        val df = build
+        df.write.mode("overwrite").parquet(path)
+        pinSchemas.put(key, df.schema)
         pinBuildCounts.computeIfAbsent(tag, _ => new AtomicInteger).incrementAndGet()
         scratchMark(spark, s"graft.pin.$tag", dir)
       }
-      if (!pinSchemas.containsKey(key))
-        pinSchemas.put(key, spark.read.parquet(path).schema)
     }
     spark.read.schema(pinSchemas.get(key)).parquet(path)
   }
@@ -219,11 +197,10 @@ object Tables {
 
   /** Session-scoped scratch key: the random session token (so two
     * sessions sharing the scratch root never collide) × a
-    * collision-resistant digest of the data-dir path (ADVICE r12: the
-    * previous 32-bit `String.hashCode` could alias two dirs served in
-    * one session, silently returning the wrong dir's cached
-    * artifacts; a 48-bit SHA-256 prefix makes an accidental collision
-    * out of reach). */
+    * collision-resistant digest of the data-dir path. A 32-bit
+    * `String.hashCode` could alias two dirs served in one session and
+    * silently return the wrong dir's trunk; a 48-bit SHA-256 prefix
+    * puts an accidental collision out of reach. */
   def sessionKey(spark: SparkSession, dir: String): String =
     s"${sessionToken(spark)}-${pathDigest(dir)}"
 
@@ -231,10 +208,10 @@ object Tables {
     * path. Minted once per isolated session (stored in the session's
     * SQLConf, so `SparkSession.newSession` clones get their own); the
     * first mint registers a JVM shutdown hook that deletes this
-    * session's own scratch subtrees — the lifecycle ADVICE r12 asked
-    * for (the r12 startup wipe of the SHARED pins/ root destroyed a
-    * concurrent sibling's live round state; stale keyed pins of
-    * kill-9'd sessions are reclaimed by [[sweepStaleScratch]]). */
+    * session's own scratch subtrees. It never touches the shared roots
+    * as a whole, which would destroy a concurrent sibling's live round
+    * state; pins of kill-9'd sessions are reclaimed by
+    * [[sweepStaleScratch]]. */
   def sessionToken(spark: SparkSession): String = {
     val tokenKey = "graft.scratch.session"
     spark.conf.getOption(tokenKey).getOrElse {
@@ -279,10 +256,9 @@ object Tables {
     * live concurrent sibling's round state. */
   private val SweepAgeMs = 12L * 3600 * 1000
 
-  /** Startup GC of BOTH scratch pin roots (replaces the r12
-    * wipe-the-shared-root, which destroyed live siblings — VERDICT
-    * r12 "wrong" #1): reap only entries whose mtime is older than
-    * [[SweepAgeMs]]. A keyed pin reaped out from under a >12h session
+  /** Startup GC of BOTH scratch pin roots: reap only entries whose
+    * mtime is older than [[SweepAgeMs]], so a live sibling sharing the
+    * root keeps its pins. A keyed pin reaped out from under a >12h session
     * is absorbed (its [[scratchReady]] guard re-checks existence and
     * silently rebuilds); transient pins never live that long between
     * write and read. */
@@ -298,8 +274,8 @@ object Tables {
     }
   }
 
-  /** Guard predicate for one-time scratch materializations (VERDICT r9
-    * #8): true iff this session already wrote the artifact for `dir`
+  /** Guard predicate for one-time scratch materializations: true iff
+    * this session already wrote the artifact for `dir`
     * AND its path still exists on disk. The session-conf flag alone
     * trusts the filesystem blindly — an operator wiping the scratch
     * root mid-session (disk pressure, tmp cleaner, manual rm) used to
@@ -309,12 +285,11 @@ object Tables {
     * tested in Round10Spec). Listing a parquet dir's footer is a
     * metadata stat, not a data scan.
     *
-    * The readiness flag is keyed PER DIR (ADVICE r11): the artifact
-    * paths were always dir-keyed via [[sessionKey]], but a single
-    * `flag → last dir` conf entry made a session alternating between
-    * two SF dirs (a multi-SF verify loop in one JVM) re-tokenize and
-    * rewrite the full trunk on every switch even though the other
-    * dir's artifacts were still valid on disk. */
+    * The readiness flag is keyed PER DIR, like the artifact paths
+    * ([[sessionKey]]): a single `flag → last dir` entry would make a
+    * session alternating between two SF dirs (a multi-SF verify loop
+    * in one JVM) rewrite the full trunk on every switch, even though
+    * the other dir's artifacts are still valid on disk. */
   private def scratchReady(spark: SparkSession, flagKey: String, dir: String,
                            path: String): Boolean =
     spark.conf.getOption(dirFlag(flagKey, dir)).contains("true") && {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -42,11 +42,11 @@ object DedupQueries {
   private val BandSize   = 2 // 8 bands of 2: P(miss | j) = (1 - j²)^8; j=0.9 → 1.7e-6
   private val JThreshold = 0.5
 
-  /** Skew guard (VERDICT r2 #2, reworked r4 per ADVICE r3): target
-    * per-shard size for the bucket self-join. A bucket larger than
-    * this is NOT dropped (the r3 cap silently lost every pair of an
-    * oversized organic bucket — e.g. >256 templated near-but-not-exact
-    * duplicates surviving the stage-1 exact collapse); instead it is
+  /** Skew guard: target per-shard size for the bucket self-join. A
+    * bucket larger than this is NOT dropped (a plain cap would silently
+    * lose every pair of an oversized organic bucket — e.g. >256
+    * templated near-but-not-exact duplicates surviving the stage-1
+    * exact collapse); instead it is
     * split into ⌈size/target⌉ SALTED shards: one side keeps its
     * hash-assigned shard, the other is replicated across the bucket's
     * shards, so every pair still meets in exactly one shard. Total
@@ -95,11 +95,11 @@ object DedupQueries {
     * `m = ⌈sz/target⌉` shards — side `a` hash-assigned to one shard,
     * side `b` replicated to all `m` — so a pair (x, y) still meets
     * (in x's shard) and no task materializes more than target × sz
-    * rows for that bucket. Replaces the r3 cap, which silently
-    * DROPPED oversized buckets (ADVICE r3: recall loss on >cap
-    * organic near-dup cliques). Output pairs are NOT deduplicated —
-    * callers run their per-pair prefilter first, then `distinct()`,
-    * so the dedup shuffle sees the post-filter stream. */
+    * rows for that bucket. A cap that DROPPED oversized buckets
+    * would lose recall on organic near-dup cliques larger than the
+    * cap. Output pairs are NOT deduplicated — callers run their
+    * per-pair prefilter first, then `distinct()`, so the dedup shuffle
+    * sees the post-filter stream. */
   private[queries] def bucketJoinPairs(buckets: DataFrame, keys: Seq[String]): DataFrame = {
     val keyCols = keys.map(col)
     val w = Window.partitionBy(keyCols: _*)
@@ -272,8 +272,7 @@ object DedupQueries {
   /** MinHash + LSH near-dup pairs, VERIFIED (SURVEY extension; the
     * shingle→minhash→band→bucket-join→exact-verify pipeline). Output
     * is the verification stage — (d1, d2, exact Jaccard ≥ 0.5) — so
-    * the driver hash-checks it against the DuckDB brute-force oracle
-    * (VERDICT r2 task #1). */
+    * the driver hash-checks it against the DuckDB brute-force oracle. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val (groups, verified, _) = trunk(spark, dir)
     expand(verified, groups)
@@ -284,18 +283,6 @@ object DedupQueries {
   private[graft] def minhashLshOn(docs: DataFrame): DataFrame = {
     val (groups, verified) = verifiedRepPairs(docs)
     expand(verified, groups)
-  }
-
-  /** Reliable-checkpoint root for iterative fixpoints (VERDICT r9
-    * #4): one-time `setCheckpointDir` under the scratch root — in
-    * production this is the durable cluster filesystem; the contract
-    * (round state survives executor loss) is identical. Spark already
-    * namespaces a random subdirectory per application, so concurrent
-    * sessions never collide. */
-  private[graft] def ensureCheckpointDir(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(s"${Tables.scratchDir}/checkpoints")
   }
 
   /** One-time materialization of the stage-1 exact-duplicate collapse
@@ -313,11 +300,11 @@ object DedupQueries {
 
   /** One-time materialization of the shared MinHash trunk per (session,
     * data dir) — a [[Tables.pinKeyed]] chain (verified pairs, then the
-    * component labels built from their read), applied to VERDICT r4 #1:
-    * [[minhashLsh]], [[dedupKeep]] and [[dedupClustersFull]] all need
-    * (groups, verified rep pairs), and each independently re-running
-    * collapse→signature→band→prefilter→verify was 11.7s of the 51.3s
-    * clean bench. The first caller in a session computes
+    * component labels built from their read): [[minhashLsh]],
+    * [[dedupKeep]] and [[dedupClustersFull]] all need (groups, verified
+    * rep pairs), and each independently re-running
+    * collapse→signature→band→prefilter→verify once cost 11.7s of a
+    * 51.3s bench. The first caller in a session computes
     * [[verifiedRepPairs]] once and writes both frames to scratch
     * parquet; subsequent callers (and subsequent data-dir repeats) do a
     * plain columnar read. Queries stay standalone by contract — any of
@@ -335,13 +322,13 @@ object DedupQueries {
     // fixpoint over the same pair graph — run it once, over the
     // just-written parquet (flat lineage for the round jobs)
     val labels = Tables.pinKeyed(spark, "deduptrunk-labels", dir)(
-      components(verified.select("d1", "d2")))
+      components(verified.select("d1", "d2"), "cc-dedup-trunk"))
     (groups, verified, labels)
   }
 
   /** Eagerly materializes the shared scratch artifacts (stage-1 collapse
     * + MinHash trunk + component labels) for `dir`, so a caller that
-    * wants deterministic cost attribution (graft.Bench, VERDICT r6 #2)
+    * wants deterministic cost attribution (graft.Bench)
     * can pay the one-time family-shared writes under its own label
     * instead of whichever dedup query happens to run first absorbing
     * 10+s of trunk cost by iteration luck. Idempotent: a second call in
@@ -358,14 +345,14 @@ object DedupQueries {
     * [[minhashLshOn]] (pair output), [[dedupKeepOn]] and
     * [[dedupClustersFullOn]] (clustering outputs). */
   private[graft] def verifiedRepPairs(docs: DataFrame): (DataFrame, DataFrame) = {
-    // localCheckpoint (not cache): materialized once for the reuses
-    // below, blocks freed on GC — no unpersist bookkeeping, no cache
-    // leak into a long-lived shared session (ADVICE r1). The full
-    // shingle stream is deliberately NOT materialized (r4): it is
-    // consumed exactly once, fused inside the signature aggregation —
-    // at 100 TB it is the largest intermediate in the pipeline and
-    // checkpointing it (r3) cost more than recomputing the few
-    // candidate docs' shingles for verification.
+    // the groups are pinned (not cached): materialized once for the
+    // reuses below, with no unpersist bookkeeping and no cache leak
+    // into a long-lived shared session. The full shingle stream is
+    // deliberately NOT materialized: it is consumed exactly once,
+    // fused inside the signature aggregation — at 100 TB it is the
+    // largest intermediate in the pipeline, and materializing it cost
+    // more than recomputing the few candidate docs' shingles for
+    // verification.
     val groups = Tables.scratchPin(groupsOf(docs), "vrp-groups") // doc-sized — durable pin (r11)
     (groups, verifiedFromGroups(docs, groups))
   }
@@ -421,35 +408,30 @@ object DedupQueries {
     * diameter rounds, each a full cluster barrier at 100 TB — flips
     * the loop into pointer-jumping after round 2 and converges in
     * O(log diameter) further rounds (64-chain ScalaTest).
-    * Every round's lineage cut is a RELIABLE `checkpoint()` to the
-    * scratch root (VERDICT r9 #4 — replacing the r8 `localCheckpoint`
-    * cuts): executor-local blocks die with the executor, and an
-    * iterative job cannot recompute a cut lineage, so a single
-    * executor loss used to kill the whole fixpoint; durable round
-    * state bounds the blast radius of any failure to one round's
-    * recompute from files — the GraphX `checkpointInterval` contract
-    * with interval 1, affordable because the relation is label-sized.
+    *
+    * The edges, the initial labels and every round's labels are pinned
+    * through one [[Tables.PinChain]] under `tag` (one literal tag per
+    * call site), so each round reads flat files and a failure costs one
+    * round's recompute from them, not the whole fixpoint. The
+    * changed-label count is observed on the frame the round's pin
+    * writes: the write is the round's only job, and the count is exact.
     * Runs over REPRESENTATIVE pairs only, so the label table is one
     * row per doc in a near-dup relation — not per corpus doc — at any
     * scale. */
-  private[graft] def components(pairs: DataFrame): DataFrame = {
-    ensureCheckpointDir(pairs.sparkSession)
-    val edges = pairs.select(col("d1"), col("d2"))
-      .unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-      .checkpoint()
-    var lab = edges.select(col("d1").as("doc")).distinct()
-      .withColumn("root", col("doc"))
-      .checkpoint()
+  private[graft] def components(pairs: DataFrame, tag: String = "cc"): DataFrame = {
+    val pc = new Tables.PinChain(tag)
+    val edges = pc.next(pairs.select(col("d1"), col("d2"))
+      .unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2"))))
+    var lab = pc.next(edges.select(col("d1").as("doc")).distinct()
+      .withColumn("root", col("doc")))
     var changed = 1L
     var round = 0
     while (changed > 0) {
       round += 1
-      val roundT0 = System.nanoTime()
-      // union-min one-shuffle base step (r16 — the shape that won for
-      // dbscan/percolation in r15, applicable because every node owns
-      // exactly one label row and the pull side is node-sized): the
-      // old join+aggregate THEN left-join-back paid a third exchange
-      // per round for the same min.
+      // union-min base step, one shuffle: every node owns exactly one
+      // label row and the pull side is node-sized, so a join+aggregate
+      // followed by a left-join back would pay a third exchange per
+      // round for the same min.
       val pulled = edges
         .join(lab.select(col("doc").as("d2"), col("root").as("cand")), "d2")
         .select(col("d1").cast("long").as("doc"), col("cand").cast("long"),
@@ -462,13 +444,11 @@ object DedupQueries {
         .agg(min("cand").as("root"), max("prev").as("prev"))
       val preNext = if (round < 3) stepped
       else {
-        // path halving via the PREVIOUS round's checkpointed labels
-        // (r16): prevlab[x] ≤ x and stays in x's component, so each
-        // jump is sound by the same monotonicity argument as before —
-        // and because prev-round labels are already materialized, the
-        // mid-round checkpoint job the stepped-self-join needed is
-        // gone; two jumps per round for one job where one jump cost
-        // two jobs.
+        // path halving via the PREVIOUS round's pinned labels:
+        // prevlab[x] ≤ x and stays in x's component, so each jump is
+        // sound by the same monotonicity argument, and because those
+        // labels are already materialized the round needs no mid-round
+        // pin: two jumps per round for one job.
         val l1 = lab.select(col("doc").cast("long").as("rdoc"),
           col("root").cast("long").as("rroot"))
         val h1 = stepped.join(l1, stepped("root") === col("rdoc"), "left")
@@ -479,36 +459,18 @@ object DedupQueries {
           .select(col("doc"), coalesce(col("rroot2"), col("root")).as("root"),
             col("prev"))
       }
-      // convergence check rides the SAME job as the round's
-      // materialization (VERDICT r4 #4): changed-label rows are counted
-      // by an accumulator inside the checkpoint pass instead of a
-      // second count() action per round. Accumulator updates in a
-      // transformation are at-least-once under task retry — safe here,
-      // because over-count only triggers one extra (no-op) round, and
-      // convergence (zero) is exact: no task observed a change.
-      val spark = preNext.sparkSession
-      val acc = spark.sparkContext.longAccumulator("graft.components.changed")
-      import spark.implicits._
-      val next = preNext
+      val obs = new Observation()
+      lab = pc.next(preNext
         .select(col("doc").cast("long"), col("root").cast("long"), col("prev").cast("long"))
-        .as[(Long, Long, Long)]
-        .map { t => if (t._2 != t._3) acc.add(1); t }
-        .toDF("doc", "root", "prev")
-        // eager MUST be explicit (ADVICE r5): reading acc.value below is
-        // only correct because this checkpoint materializes the map NOW —
-        // a lazy checkpoint would read 0 and exit with wrong labels
-        .checkpoint(eager = true)
-      changed = acc.value
-      lab = next.drop("prev")
-      graft.StageTimes.bump("components.rounds", 1.0)
-      graft.StageTimes.bump(s"components.round$round",
-        (System.nanoTime() - roundT0) / 1e9)
+        .observe(obs, count(when(col("root") =!= col("prev"), 1)).as("changed"))
+        .drop("prev"))
+      changed = obs.get("changed").asInstanceOf[Long]
     }
-    lab.select("doc", "root")
+    lab
   }
 
   /** Member→canonical dedup DECISION over the full corpus — the
-    * operator a 100 TB pipeline actually runs (VERDICT r3 #2): for
+    * operator a 100 TB pipeline actually runs: for
     * EVERY document, its cluster's canonical id (minimum doc_id over
     * the connected component of the verified near-dup graph,
     * including exact duplicates) and whether this row is the one
@@ -526,7 +488,7 @@ object DedupQueries {
 
   private[graft] def dedupKeepOn(docs: DataFrame): DataFrame = {
     val (groups, verified) = verifiedRepPairs(docs)
-    keepFrom(groups, components(verified.select("d1", "d2")))
+    keepFrom(groups, components(verified.select("d1", "d2"), "cc-dedup-keep"))
   }
 
   private def keepFrom(groups: DataFrame, comp: DataFrame): DataFrame = {
@@ -566,9 +528,9 @@ object DedupQueries {
        |ORDER BY d.doc_id""".stripMargin
 
   /** Near-dup clustering over the FULL corpus, fed by the LSH-verified
-    * pair pipeline rather than the doc_id-capped exact join (VERDICT
-    * r3 #3 — [[TextQueries.dedupClusters]] keeps the capped form as
-    * the recursive-CTE continuity check): every document in a
+    * pair pipeline rather than the doc_id-capped exact join
+    * ([[TextQueries.dedupClusters]] keeps the capped form as the
+    * recursive-CTE continuity check): every document in a
     * component of size ≥ 2 (near-dups AND exact duplicates), with its
     * component root and canonical flag. */
   def dedupClustersFull(spark: SparkSession, dir: String): DataFrame = {
@@ -578,7 +540,7 @@ object DedupQueries {
 
   private[graft] def dedupClustersFullOn(docs: DataFrame): DataFrame = {
     val (groups, verified) = verifiedRepPairs(docs)
-    clustersFrom(groups, components(verified.select("d1", "d2")))
+    clustersFrom(groups, components(verified.select("d1", "d2"), "cc-dedup-full"))
   }
 
   private def clustersFrom(groups: DataFrame, comp: DataFrame): DataFrame = {

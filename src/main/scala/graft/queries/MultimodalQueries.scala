@@ -443,7 +443,7 @@ object MultimodalQueries {
     * completes the text family: pairs are the verification contract,
     * the (member → canonical, is_canonical) decision is what a
     * pipeline actually materializes. Reuses the min-label fixpoint
-    * ([[DedupQueries.components]] — path-halving, accumulator-checked
+    * ([[DedupQueries.components]] — path-halving, observed-count
     * convergence), so the scale argument is inherited: the label table
     * is one row per media item IN a near-dup relation, not per corpus
     * row, and rounds are O(log diameter). Output covers exactly the
@@ -452,7 +452,8 @@ object MultimodalQueries {
     * contract). */
   def mediaClusters(spark: SparkSession, dir: String): DataFrame =
     DedupQueries.components(
-        mediaPairsScratch(spark, dir).select(col("m1").as("d1"), col("m2").as("d2")))
+        mediaPairsScratch(spark, dir).select(col("m1").as("d1"), col("m2").as("d2")),
+        "cc-media")
       .select(col("doc").as("media_id"), col("root").as("canonical_id"),
         (col("doc") === col("root")).as("is_canonical"))
       .orderBy("media_id")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -376,7 +376,7 @@ object SimilarityQueries {
     * so the first caller runs it once and the other does a flat read. */
   private[graft] def semClustScratch(spark: SparkSession, dir: String): DataFrame =
     Tables.pinKeyed(spark, "semclust", dir) {
-      DedupQueries.components(mutEdgesScratch(spark, dir))
+      DedupQueries.components(mutEdgesScratch(spark, dir), "cc-semclust")
     }
 
   /** Eager trunk materialization for deterministic bench cost
@@ -407,7 +407,7 @@ object SimilarityQueries {
           col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
         .filter(col("a.src") < col("a.dst"))
         .select(col("a.src").as("d1"), col("a.dst").as("d2"))
-      DedupQueries.components(mut)
+      DedupQueries.components(mut, "cc-semclust-adhoc")
         .select(col("doc").as("vec_id"), col("root").as("cluster_id"),
           (col("doc") === col("root")).as("is_canonical"))
         .orderBy("vec_id")
@@ -6527,7 +6527,6 @@ object SimilarityQueries {
 
   private[graft] def mstRoundsOnUnd(und: DataFrame): DataFrame = {
     val spark = und.sparkSession
-    import spark.implicits._
     val pc = new graft.Tables.PinChain("mst")
     // round state = the LIVE edge list (still crossing components, with
     // endpoints relabeled to component ids) — it SHRINKS geometrically
@@ -6535,34 +6534,36 @@ object SimilarityQueries {
     // node-sized all the way down. Each piece of state crosses a
     // durable pin barrier (the sssp/pageRank round-state discipline;
     // localCheckpoint chains measured ~3× slower per round here).
-    // The live-edge count rides the pin write as an accumulator (r16,
-    // the components-fixpoint idiom): the per-round isEmpty probe job
-    // is gone. At-least-once accumulator updates under task retry can
-    // only OVERcount; the branch that matters — zero — is exact (no
-    // task observed a row), and a positive overcount changes nothing
-    // (the value is only compared against 0).
+    // The live-edge count is observed on the pin write, so no separate
+    // isEmpty probe job runs per round.
     def pinLive(df: DataFrame): (DataFrame, Long) = {
-      val acc = spark.sparkContext.longAccumulator("graft.mst.live")
-      val counted = df
+      val obs = new Observation()
+      val pinned = pc.next(df
         .select(col("cu").cast("long"), col("cv").cast("long"),
           col("cos6").cast("long"), col("pk").cast("long"))
-        .as[(Long, Long, Long, Long)]
-        .map { t => acc.add(1); t }
-        .toDF("cu", "cv", "cos6", "pk")
-      (pc.next(counted), acc.value) // the pin write IS the action
+        .observe(obs, count(lit(1)).as("n")))
+      (pinned, obs.get("n").asInstanceOf[Long])
+    }
+    // pins a pointer-walk step (c, p) and counts the pointers it moved
+    // (p ≠ op, the step's input pointer)
+    def pinWalk(df: DataFrame): (DataFrame, Long) = {
+      val obs = new Observation()
+      val pinned = pc.next(df
+        .observe(obs, count(when(col("p") =!= col("op"), 1)).as("n"))
+        .select("c", "p"))
+      (pinned, obs.get("n").asInstanceOf[Long])
     }
     var (live, liveCount) = pinLive(und.select(
       col("u").as("cu"), col("v").as("cv"), col("cos6"),
       expr("u * 2147483648L + v").as("pk")))
-    // per-round stats are DEFERRED (r16): nothing the loop's control
-    // flow needs lives in them — liveCount (accumulator, free) gates
-    // the rounds and the changed-accumulators gate the pointer walk —
+    // per-round stats are DEFERRED: nothing the loop's control flow
+    // needs lives in them — liveCount (observed, free) gates the
+    // rounds and the observed changed-counts gate the pointer walk —
     // so the per-round added-edges head() action and the upfront
     // node-count action are replaced by ONE lazy plan over the
     // retained per-round sel pins, folded at output-action time
     // (running totals via a 6-row window).
     val roundAdds = (1 to BvRounds).map { r =>
-      val roundT0 = System.nanoTime()
       // converged graphs short-circuit: no cross edge → nothing merges;
       // the emitted (added=0, sim=0) row is what the full path computes
       val addedDf = if (liveCount == 0L)
@@ -6582,9 +6583,9 @@ object SimilarityQueries {
         // mst.seed 1.7→5.0s for a 2.3s pin saved; net zero-to-worse) —
         // unlike sortedNeighborhood's window pass, where ReuseExchange
         // does share (r15 note there).
-        val sel = graft.StageTimes.timed("mst.sel")(pc.next(
+        val sel = pc.next(
           ec.join(s2, col("c") === col("c2") && col("pk") === col("mpk"))
-            .select("c", "nc", "pk", "w"))) // exactly one row per component
+            .select("c", "nc", "pk", "w")) // exactly one row per component
         // this round's forest stats, LAZY over the retained sel pin
         val added = sel.select(col("pk"), (-col("w")).as("cos6")).distinct()
           .agg(count(lit(1)).as("added"),
@@ -6603,66 +6604,53 @@ object SimilarityQueries {
               col("x.c")).otherwise(col("x.nc")).as("p"))
         // seed the walk at p² — the hook and one composition share a
         // single pinned job over the freshly pinned sel. The seed pin
-        // also carries the convergence probe (r16): if the second hop
+        // also carries the convergence probe: if the second hop
         // moved NO pointer, p¹ is idempotent on its image — every
         // pointer already names a root — so the quadruple loop is
         // skipped outright. Real kNN Borůvka trees are stars/short
         // chains, so the common round now pays ONE pointer job.
-        val seedAcc = spark.sparkContext.longAccumulator("graft.mst.seedchg")
-        var m = graft.StageTimes.timed("mst.seed")(pc.next(hk.as("g").join(hk.as("h"), col("g.p") === col("h.c"), "left")
+        var (m, changed) = pinWalk(hk.as("g").join(hk.as("h"), col("g.p") === col("h.c"), "left")
           .select(col("g.c").cast("long").as("c"),
             coalesce(col("h.p"), col("g.p")).cast("long").as("p"),
-            col("g.p").cast("long").as("op"))
-          .as[(Long, Long, Long)]
-          .map { t => if (t._2 != t._3) seedAcc.add(1); (t._1, t._2) }
-          .toDF("c", "p")))
-        var changed = seedAcc.value
+            col("g.p").cast("long").as("op")))
         while (changed > 0) {
           // QUADRUPLE per pinned step (m∘m∘m∘m — three self-joins in
           // one job): the fixed pin overhead dominates at this state
-          // size, so fewer, denser jumps beat classic doubling.
-          // The changed-count rides the pin write as an accumulator
-          // (r16): the per-step filter(chg).count() job is gone. Same
-          // safety argument as [[DedupQueries.components]]: a retry
-          // overcount only triggers one extra quadruple step over an
-          // already-converged m (identical values); zero is exact.
+          // size, so fewer, denser jumps beat classic doubling. The
+          // changed-count is observed on the pin write, so no
+          // filter(chg).count() job runs per step.
           val q1 = m.as("a").join(m.as("b"), col("a.p") === col("b.c"), "left")
             .select(col("a.c").as("c"),
               coalesce(col("b.p"), col("a.p")).as("p"))
-          val acc = spark.sparkContext.longAccumulator("graft.mst.changed")
-          val m2 = pc.next(
+          val (m2, changed2) = pinWalk(
             q1.as("e").join(q1.as("f"), col("e.p") === col("f.c"), "left")
               .select(col("e.c").as("c"),
                 coalesce(col("f.p"), col("e.p")).as("p"))
               .join(m.select(col("c").as("oc"), col("p").as("op")),
                 col("c") === col("oc"))
               .select(col("c").cast("long"), col("p").cast("long"),
-                col("op").cast("long"))
-              .as[(Long, Long, Long)]
-              .map { t => if (t._2 != t._3) acc.add(1); (t._1, t._2) }
-              .toDF("c", "p"))
-          changed = acc.value // pin write was the action
+                col("op").cast("long")))
           m = m2
+          changed = changed2
         }
         // relabel surviving edges; intra-tree edges drop out for good.
         // Every live endpoint has ≥1 cross edge, hence a selected edge,
         // hence a row in m — the inner joins are total.
-        // SKIPPED on the final round (r16):
+        // SKIPPED on the final round:
         // the relabeled live list is only ever read by the NEXT round,
         // so round BvRounds' pin + two joins bought nothing
         if (r < BvRounds) {
-          val (liveNext, liveNextCount) = graft.StageTimes.timed("mst.live")(pinLive(live
+          val (liveNext, liveNextCount) = pinLive(live
             .join(m.select(col("c").as("cu"), col("p").as("cu2")), "cu")
             .join(m.select(col("c").as("cv"), col("p").as("cv2")), "cv")
             .filter(col("cu2") =!= col("cv2"))
             .select(col("cu2").as("cu"), col("cv2").as("cv"),
-              col("cos6"), col("pk"))))
+              col("cos6"), col("pk")))
           live = liveNext
           liveCount = liveNextCount
         }
         added
       }
-      graft.StageTimes.bump(s"mst.round$r", (System.nanoTime() - roundT0) / 1e9)
       addedDf
     }
     // forest property: each contracted tree of k components adds

@@ -605,7 +605,7 @@ object TextQueries {
     * TO CONVERGENCE (changed-label count = 0), then the minimum doc_id
     * per cluster is kept as canonical — the step that turns pair
     * detection into an actual dedup decision. Each round is one
-    * join+aggregate; `localCheckpoint` cuts the lineage every round so
+    * join+aggregate; a scratch pin cuts the lineage every round so
     * round k never replans rounds 1..k-1, and the fixpoint check makes
     * components of ANY diameter come out right (a fixed round budget
     * silently misclusters anything deeper). Rounds ≈ min-label
@@ -613,7 +613,7 @@ object TextQueries {
     * transitive closure. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = ngramJaccard(spark, dir).select(col("d1"), col("d2"))
-    DedupQueries.components(pairs) // the shared min-label fixpoint (r4)
+    DedupQueries.components(pairs, "cc-dedup-clusters") // the shared min-label fixpoint
       .withColumn("is_canonical", col("doc") === col("root"))
       .orderBy("doc")
   }

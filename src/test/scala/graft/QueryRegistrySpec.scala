@@ -34,6 +34,5 @@ class QueryRegistrySpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    assert(spark.sparkContext.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.queries.{ExtensionQueries, TextQueries}
 
 /** Round-11 additions: the shared postings trunk (VERDICT r10 #1), the
-  * durable-pin conversion (#2), the unpartitioned-window guard (#5),
-  * the salted-join skew assertion (#6), and the ADVICE r10 expression
-  * hardening. */
+  * durable-pin conversion (#2), the salted-join skew assertion (#6),
+  * and the ADVICE r10 expression hardening. The unpartitioned-window
+  * guard (#5) lives in [[PlanGateSpec]]. */
 class Round11Spec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] =
@@ -100,71 +100,6 @@ class Round11Spec extends SparkSpec {
         rows(df.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("sv")).orderBy("k"))
       assert(aggOf(plain.select("k", "v")) == aggOf(salted.select("k", "v")))
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-  }
-
-  // ------------------------------- unpartitioned-window guard (#5)
-
-  test("every unpartitioned Window sits above a cardinality-bounding operator") {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-
-    // Walk DOWN from an unpartitioned window: reaching a raw corpus
-    // table scan (path under /root/testdata) WITHOUT crossing an
-    // aggregate or a limit means the window globally sorts a
-    // corpus-sized relation — the one shape the standing contract
-    // forbids (a histogram/vocab aggregate or a shortlist limit must
-    // bound it first). Pinned relations (RDD scans, scratch parquet)
-    // terminate the walk: their boundedness is audited at the pin
-    // sites (r11 durable-pin sweep).
-    def corpusScan(p: SparkPlan): Option[String] = p match {
-      case _: HashAggregateExec | _: ObjectHashAggregateExec |
-           _: SortAggregateExec => None
-      case _: TakeOrderedAndProjectExec | _: GlobalLimitExec |
-           _: LocalLimitExec | _: CollectLimitExec => None
-      case f: FileSourceScanExec =>
-        val roots = f.relation.location.rootPaths.map(_.toString)
-        roots.find(_.contains("/testdata/"))
-      case r: ReusedExchangeExec => corpusScan(r.child)
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
-        import org.apache.spark.sql.catalyst.plans._
-        val (l, r) = (corpusScan(j.left), corpusScan(j.right))
-        j.joinType match {
-          // inner: a bounded side bounds the output (the shortlist ⋈
-          // corpus-lookup enrichment pattern, e.g. rag_pack's window
-          // rides bm25's 50-row limit joined to per-doc token counts)
-          case Inner => if (l.isEmpty || r.isEmpty) None else l.orElse(r)
-          // row-preserving sides must themselves be bounded
-          case LeftOuter | LeftSemi | LeftAnti | _: ExistenceJoin => l
-          case RightOuter => r
-          case _ => l.orElse(r)
-        }
-      case other => other.children.view.flatMap(corpusScan(_)).headOption
-    }
-
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val offenders = scala.collection.mutable.ArrayBuffer[String]()
-    try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.executedPlan
-          catch { case e: Throwable =>
-            fail(s"$name failed to plan: ${e.getMessage}")
-          }
-        val unpartitioned = plan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w.child
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.child
-        }
-        unpartitioned.foreach { child =>
-          corpusScan(child).foreach { path =>
-            offenders += s"$name: unpartitioned window over corpus scan $path"
-          }
-        }
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   // ------------------------------------------ round-11 wave operators

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.queries.{AnalyticsQueries, ExtensionQueries, SimilarityQueries}
 
 /** Round-12 additions: the scratch-pin lifecycle (VERDICT r11 #1), the
-  * shared seeded-BFS trunk (#2), the whole-surface join plan gate (#3),
-  * the pin-wipe chaos test (#6), and the ADVICE r11 expression guards. */
+  * shared seeded-BFS trunk (#2), the pin-wipe chaos test (#6), and the
+  * ADVICE r11 expression guards. The whole-surface join plan gate (#3)
+  * lives in [[PlanGateSpec]]. */
 class Round12Spec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] =
@@ -84,105 +85,6 @@ class Round12Spec extends SparkSpec {
     val after = rows(SimilarityQueries.betweennessSeeds(spark, sfDir))
     assert(after == before)
     assert(rows(SimilarityQueries.closenessCentrality(spark, sfDir)).size == 8)
-  }
-
-  // ------------------------------------- whole-surface join gate (#3)
-
-  /** Walk DOWN a physical subtree looking for a raw corpus scan not
-    * bounded by an aggregate or a limit — the Round11Spec window-guard
-    * walk, reused for the broadcast side of nested-loop joins. */
-  private def unboundedCorpusScan(p: org.apache.spark.sql.execution.SparkPlan): Option[String] = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    p match {
-      case _: HashAggregateExec | _: ObjectHashAggregateExec |
-           _: SortAggregateExec => None
-      case _: TakeOrderedAndProjectExec | _: GlobalLimitExec |
-           _: LocalLimitExec | _: CollectLimitExec => None
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString).find(_.contains("/testdata/"))
-      case r: ReusedExchangeExec => unboundedCorpusScan(r.child)
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
-        import org.apache.spark.sql.catalyst.plans._
-        val (l, r) = (unboundedCorpusScan(j.left), unboundedCorpusScan(j.right))
-        j.joinType match {
-          // inner: a bounded side bounds the output (shortlist ⋈
-          // corpus-lookup enrichment — e.g. a top-k anchor set joined
-          // to per-doc attributes stays top-k-sized)
-          case Inner => if (l.isEmpty || r.isEmpty) None else l.orElse(r)
-          // row-preserving sides must themselves be bounded
-          case LeftOuter | LeftSemi | LeftAnti | _: ExistenceJoin => l
-          case RightOuter => r
-          case _ => l.orElse(r)
-        }
-      case other => other.children.view.flatMap(unboundedCorpusScan(_)).headOption
-    }
-  }
-
-  /** The per-plan gate: no CartesianProductExec anywhere; every
-    * BroadcastNestedLoopJoinExec's BROADCAST side must be aggregate-
-    * or limit-bounded (the 1-row-scalar / enum-bounded contract that
-    * was previously enforced by a manual per-round Explain audit
-    * recorded in PERF.md). */
-  private def joinGateOffenses(name: String,
-                               plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    val carts = plan.collect { case c: CartesianProductExec =>
-      s"$name: CartesianProductExec (${c.simpleStringWithNodeId()})"
-    }
-    val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec =>
-      val build = j.buildSide match {
-        case BuildLeft  => j.left
-        case BuildRight => j.right
-      }
-      unboundedCorpusScan(build).map(path =>
-        s"$name: BroadcastNestedLoopJoin broadcasts an unbounded corpus scan $path")
-    }.flatten
-    carts ++ bnlj
-  }
-
-  test("join gate: every declared query plans with zero CartesianProduct and only bounded BNLJ broadcasts") {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val offenders = scala.collection.mutable.ArrayBuffer[String]()
-    try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.executedPlan
-          catch { case e: Throwable =>
-            fail(s"$name failed to plan: ${e.getMessage}")
-          }
-        offenders ++= joinGateOffenses(name, plan)
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    assert(offenders.isEmpty, offenders.mkString("\n"))
-  }
-
-  test("join gate flags a planted unbounded cross join (both CartesianProduct and BNLJ shapes)") {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    val abtWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val ev = Tables(spark, sfDir, "events").select("event_id")
-      val docs = Tables(spark, sfDir, "documents").select("doc_id")
-      // small side broadcastable -> BNLJ over a raw corpus scan
-      val bnljPlan = ev.crossJoin(Tables(spark, sfDir, "region"))
-        .queryExecution.executedPlan
-      // broadcast disabled -> genuine CartesianProductExec
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cartPlan = ev.crossJoin(docs).queryExecution.executedPlan
-      assert(joinGateOffenses("planted_bnlj", bnljPlan).nonEmpty)
-      assert(joinGateOffenses("planted_cart", cartPlan).exists(_.contains("CartesianProduct")))
-      // and the legitimate shape stays clean: broadcast of a 1-row agg
-      val scalar = ev.agg(count(lit(1)).as("n"))
-      val okPlan = docs.crossJoin(broadcast(scalar)).queryExecution.executedPlan
-      assert(joinGateOffenses("scalar_cross", okPlan).isEmpty)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abtWas)
-    }
   }
 
   // ------------------------------------------ ADVICE r11 guards
