@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
 
   /** One-line driver-channel JSON. Contract (unit-tested, BenchJsonSpec):
@@ -128,6 +130,13 @@ object Bench {
       after: Map[String, Int]): Seq[String] =
     after.collect { case (tag, n) if n > before.getOrElse(tag, 0) => tag }.toSeq.sorted
 
+  /** Janino compiles in this JVM so far, driver and executors alike:
+    * (count, total ns). Spark's codegen cache holds
+    * `spark.sql.codegen.cache.maxEntries` classes per class loader, so
+    * a key whose plans miss it pays a compile on every rep. */
+  private def compiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the driver's documented environment (local[32],
@@ -172,9 +181,11 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     def measure(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Seq[Double] =
-      (1 to reps).map { rep =>
+        : Seq[Double] = {
+      val compiled = scala.collection.mutable.ArrayBuffer.empty[String]
+      val secs = (1 to reps).map { rep =>
         val built = Tables.pinBuildSnapshot()
+        val (n0, ns0) = compiles()
         val t0 = System.nanoTime()
         // a failed query must NOT masquerade as a fast one: record -1
         // (and say so on stderr) instead of its time-to-crash
@@ -184,6 +195,8 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0
           }
+        val (n1, ns1) = compiles()
+        compiled += s"${n1 - n0} (${(ns1 - ns0) / 1000000} ms)"
         builtBetween(built, Tables.pinBuildSnapshot()).foreach { tag =>
           System.err.println(s"[bench] $name built trunk $tag inside rep $rep")
         }
@@ -192,6 +205,9 @@ object Bench {
         GraftSession.dropCached(spark)
         sec
       }
+      System.err.println(s"[bench] $name compiled per rep: ${compiled.mkString(", ")}")
+      secs
+    }
     // canary cadence/threshold knobs; a probe costs
     // ~0.15s, so every-5 adds ~3% to a full-surface pass
     val canEvery = sys.env.getOrElse("SPARK_GRAFT_BENCH_CANARY_EVERY", "5").toInt

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Plan auditor: prints the formatted physical plan of selected queries
   * so scan pushdown (PushedFilters/ReadSchema), join strategy
   * (BroadcastHashJoin vs SortMergeJoin), top-k (TakeOrderedAndProject)
-  * and codegen spans can be reviewed. Usage:
+  * and codegen spans can be reviewed. A plan that reads an RDD (a
+  * `Scan ExistingRDD` leaf, e.g. the message-passing graph fixpoints)
+  * also prints that RDD's lineage, where its rounds live. Usage:
   * `runMain graft.Explain [queryName ...]` (default: a representative set).
   */
 object Explain {
@@ -26,7 +30,10 @@ object Explain {
         "q_cascade_delete")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").explain("formatted")
+      val df = SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
+      df.explain("formatted")
+      df.queryExecution.optimizedPlan.collectWithSubqueries { case l: LogicalRDD => l.rdd }
+        .foreach(rdd => println(s"Scan ExistingRDD lineage:\n${rdd.toDebugString}"))
     }
     spark.stop()
   }

@@ -1,17 +1,20 @@
 package graft
 
+import org.apache.spark.{OneToOneDependency, ShuffleDependency}
+import org.apache.spark.rdd.{CoGroupedRDD, RDD}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import graft.queries.SimilarityQueries
 
 /** PageRank, personalized PageRank and label propagation
   * ([[SimilarityQueries.pageRankOnEdges]], `pprSeedsOnEdges`,
-  * `labelPropOn`): each window recurrence against a plain-Scala replay
-  * of the oracle's iteration on seeded random graphs, and the plan
-  * shape the recurrences exist for — one read of the edge relation,
-  * no join, at most one exchange per round plus a fixed few. */
+  * `labelPropOn`): each message-passing fixpoint against a plain-Scala
+  * replay of the oracle's iteration on seeded random graphs, and the
+  * lineage the fixpoints exist for — one read of the edge relation,
+  * narrow joins only, one shuffle per round plus the adjacency's (and
+  * label propagation's node partitioning), and at most one job at
+  * construction. */
 class GraphIterationSpec extends SparkSpec {
 
   // SimilarityQueries.PrIters, PrScale, CcSeeds, PprTop, LpIters
@@ -120,6 +123,11 @@ class GraphIterationSpec extends SparkSpec {
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       assert(got === pprReplay(edges), s"seed $seed")
     }
+    // the seed set is merged from several partitions' top-8s
+    val (edges, _) = graph(21)
+    val got = SimilarityQueries.pprSeedsOnEdges(edgesDf(edges).repartition(3)).collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    assert(got === pprReplay(edges), "edges over 3 partitions")
   }
 
   test("labelPropOn equals the frozen-frontier replay on seeded random graphs") {
@@ -135,34 +143,60 @@ class GraphIterationSpec extends SparkSpec {
       assert(pred(1010L).isDefined && pred(1015L).isEmpty && pred(2000L).isEmpty, s"seed $seed")
       assert(pred(3000L) === Some(1), s"seed $seed: the tie goes to the smaller label")
     }
+    // a null and a negative label: 11 is unlabeled but not hidden, takes
+    // 12's -1 in round 1 and passes it to hidden 10 in round 2; hidden
+    // 15's tie between -1 and 2 goes to -1; hidden 20's true label is
+    // null. A state that used -1 as "no label" would leave 10 unlabeled.
+    val edges = Seq(12L -> 11L, 11L -> 10L, 13L -> 15L, 16L -> 15L, 13L -> 20L)
+    val emb = Seq[(Long, Option[Int])](10L -> Some(4), 11L -> None, 12L -> Some(-1),
+      13L -> Some(-1), 15L -> Some(-1), 16L -> Some(2), 20L -> None).toDF("vec_id", "label")
+    val got = SimilarityQueries.labelPropOn(edgesDf(edges), emb).collect().toSeq
+      .map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3)))
+    assert(got === Seq((10L, 4, -1, 0), (15L, -1, -1, 1), (20L, null, -1, null)))
   }
 
-  /** Every node of the plan, subqueries included. */
-  private def nodes(plan: SparkPlan): Seq[SparkPlan] =
-    plan.collectWithSubqueries { case p => p }
+  /** Every RDD of `rdd`'s lineage, once each. */
+  private def lineage(rdd: RDD[_]): Seq[RDD[_]] = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
+    def visit(r: RDD[_]): Unit =
+      if (!seen.contains(r.id)) { seen(r.id) = r; r.dependencies.foreach(d => visit(d.rdd)) }
+    visit(rdd)
+    seen.values.toSeq
+  }
 
-  test("each recurrence scans the edge relation once, joins nothing and shuffles once per round") {
-    val key = "spark.sql.adaptive.enabled"
-    val was = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
-      Seq(
-        ("pageRank", () => SimilarityQueries.pageRank(spark, sfDir), PrIters),
-        ("pprSeeds", () => SimilarityQueries.pprSeeds(spark, sfDir), PrIters),
-        ("labelProp", () => SimilarityQueries.labelProp(spark, sfDir), LpIters)
-      ).foreach { case (name, build, rounds) =>
-        val plan = nodes(build().queryExecution.executedPlan)
-        val edgeScans = plan.collect {
-          case s: FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.getName.startsWith("knnedges-")) => s
-        }
-        assert(edgeScans.size == 1, s"$name scans the edge relation ${edgeScans.size} times")
-        val joins = plan.collect { case j: BaseJoinExec => j.nodeName }
-        assert(joins.isEmpty, s"$name plans joins $joins")
-        assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]), s"$name broadcasts")
-        val shuffles = plan.count(_.isInstanceOf[ShuffleExchangeExec])
-        assert(shuffles <= rounds + 3, s"$name plans $shuffles exchanges for $rounds rounds")
+  test("each fixpoint scans the edge relation once, joins narrowly and shuffles once per round") {
+    Seq(
+      // the adjacency's groupByKey, then one reduceByKey per round
+      ("pageRank", () => SimilarityQueries.pageRank(spark, sfDir), PrIters + 1),
+      ("pprSeeds", () => SimilarityQueries.pprSeeds(spark, sfDir), PrIters + 1),
+      // plus the node state's partitionBy
+      ("labelProp", () => SimilarityQueries.labelProp(spark, sfDir), LpIters + 2)
+    ).foreach { case (name, build, shuffles) =>
+      val rdds = build().queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+      assert(rdds.size == 1, s"$name reads ${rdds.size} RDDs")
+      val all = lineage(rdds.head)
+      val edgeScans = all.collect {
+        case s: FileScanRDD
+          if s.filePartitions.exists(_.files.exists(_.filePath.toString.contains("/knnedges-"))) => s
       }
-    } finally spark.conf.set(key, was)
+      assert(edgeScans.size == 1, s"$name scans the edge relation ${edgeScans.size} times")
+      val joins = all.collect { case c: CoGroupedRDD[_] => c }
+      assert(joins.nonEmpty, s"$name joins nothing")
+      joins.foreach { j =>
+        assert(j.dependencies.forall(_.isInstanceOf[OneToOneDependency[_]]),
+          s"$name shuffles into a join: ${j.dependencies}")
+      }
+      val n = all.flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
+      assert(n == shuffles, s"$name shuffles $n times, want $shuffles")
+    }
+  }
+
+  test("constructing labelPropOn starts no job, pageRankOnEdges and pprSeedsOnEdges one each") {
+    val s = spark; import s.implicits._
+    val (edges, emb) = graph(1)
+    val (e, n) = (edgesDf(edges), emb.toSeq.toDF("vec_id", "label"))
+    assert(jobsDuring(SimilarityQueries.labelPropOn(e, n))._2 == 0)
+    assert(jobsDuring(SimilarityQueries.pageRankOnEdges(e))._2 == 1)
+    assert(jobsDuring(SimilarityQueries.pprSeedsOnEdges(e))._2 == 1)
   }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,31 +11,6 @@ import graft.queries.DedupQueries
   * frame's schema, and [[DedupQueries.components]] keeps all of its
   * round state on that path. */
 class PinSpec extends SparkSpec {
-
-  /** Jobs started by `f`, counted by a listener. A marker job run after
-    * `f` bounds the count: once its start event arrives, every job `f`
-    * started has been seen. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"pin-spec-marker-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def pinRoot = s"${Tables.scratchDir}/pins/${Tables.sessionToken(spark)}"
 
