@@ -1,8 +1,10 @@
 package graft
 
+import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -11,8 +13,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * owner of every scratch-parquet pin.
   *
   * [[apply]] is the one entry point through which queries read the
-  * corpus, so scan options stay uniform. Parquet needs no explicit read
-  * schema: the footer is the schema.
+  * corpus, so scan options stay uniform. The footer is the schema; it
+  * is inferred once per table file and remembered (see [[apply]]).
   *
   * Relations an operator must materialise go under [[scratchDir]] as
   * one of two pin kinds:
@@ -41,7 +43,7 @@ object Tables {
     // point, so NTZ→TZ preserves the instant bit-for-bit).
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = corpusRead(spark, s"$dir/$name.parquet")
     assertExpectedColumns(name, df)
     if (name == "events")
       df.schema("ts").dataType match {
@@ -51,6 +53,33 @@ object Tables {
       }
     else df
   }
+
+  /** A parquet read of `path` with its remembered schema. Inference
+    * runs a Spark job, so the schema it gives is kept per (path,
+    * modification time, length) and every later read passes it: a
+    * construction over a known table starts no job, and a table
+    * rewritten in place is inferred again. A path that does not exist
+    * is read plainly, so the reader reports it as usual. */
+  private def corpusRead(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = s"$path@${st.getModificationTime}:${st.getLen}"
+        Option(corpusSchemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            corpusSchemas.put(key, df.schema)
+            df
+        }
+    }
+  }
+
+  private val corpusSchemas = new ConcurrentHashMap[String, StructType]()
 
   /** Fail-fast column check (schema from the parquet footer; no data
     * scan). Corpus drift then surfaces as ONE clear load-time error

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2258,16 +2257,16 @@ object SimilarityQueries {
     * representatives and surface hub documents (Page et al. 1999,
     * d = 0.85, [[PrIters]] fixed iterations).
     *
-    * Scale shape: vertex-centric message passing over the
-    * co-partitioned out-adjacency ([[outAdjacency]]). Each round
-    * ([[massRounds]]) joins the adjacency with the mass narrowly, sends
-    * `p div outdeg` along every out-edge, sums the messages per target
-    * with one map-side-combined `reduceByKey` (the round's only
-    * shuffle) and joins them back narrowly. The whole fixpoint is RDD
-    * lineage, so it runs as one Spark job with no per-round Catalyst
-    * planning, AQE re-plan or codegen compile; only the final
-    * `orderBy` is a DataFrame. Construction runs one job: `adj.count()`
-    * sizes the teleport term, and the rounds reuse its shuffle output.
+    * Scale shape: [[PrIters]] message-passing rounds of
+    * [[GraphRounds.step]] ([[massFrame]]). The node state is
+    * `(outdeg, p)`; each node sends `p div outdeg` along its out-edges,
+    * the messages sum map-side (the round's only shuffle), and a node
+    * takes the teleport term plus 85% of its inflow. The whole fixpoint
+    * is RDD lineage, so it runs as one Spark job with no per-round
+    * Catalyst planning, AQE re-plan or codegen compile; only the final
+    * `orderBy` is a DataFrame. Construction runs one job: `count()` of
+    * the out-degrees sizes the teleport term, and the rounds reuse the
+    * edge shuffle it writes.
     *
     * Determinism: all mass arithmetic is exact scaled integers
     * (p·10¹² units): contrib = p div outdeg, p' = (15·(S div N) +
@@ -2283,58 +2282,31 @@ object SimilarityQueries {
 
   private[graft] def pageRankOnEdges(edges: DataFrame): DataFrame = {
     import graft.functions.Det
-    val adj = outAdjacency(edges)
-    val p0 = PrScale / adj.count()
-    massFrame(edges, massRounds(adj, _ => p0))
+    val e = GraphRounds.edges(edges)
+    val deg = GraphRounds.degree(e)
+    val p0 = PrScale / deg.count()
+    massFrame(edges, e, deg, _ => p0)
       .select(col("id").as("vec_id"), col("p").as("pr12"),
         Det.rnd(col("p").cast("double") / PrScale, 9).as("pr"))
       .orderBy("vec_id")
   }
 
-  /** The out-adjacency of an edge list `(src, dst)`: each source with
-    * the array of its out-neighbours (a duplicate edge repeats, as in
-    * the oracle). It is hash-partitioned by `defaultPartitioner` of the
-    * edge pairs, so the partition count follows the input splits, and
-    * every per-node state the fixpoints join with it is kept on the
-    * same partitioner — those joins are narrow.
-    *
-    * Scale bound: a node's array holds its out-edges only, which the
-    * k-NN trunk caps at k = 5. (k-core needs the undirected degree,
-    * which k-NN hubs make unbounded; it stays a window recurrence,
-    * because `WindowExec` spills where a grouped array would not.)
-    *
-    * `Dataset.rdd` over a plan with an exchange runs AQE's stages
-    * eagerly. The trunk read and the test edge lists have no exchange,
-    * so building the adjacency starts no job. */
-  private def outAdjacency(edges: DataFrame): RDD[(Long, Array[Long])] = {
-    val pairs = edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    pairs.groupByKey(Partitioner.defaultPartitioner(pairs)).mapValues(_.toArray)
+  /** [[PrIters]] rounds of the integer mass recurrence over the sources
+    * of `e` (`deg`, their out-degrees), starting from `tele(v)`, a
+    * node's teleport mass: p' = (15·tele(v) + 85·inflow) div 100,
+    * inflow the sum of `p div outdeg` over v's in-edges. The result is
+    * the node masses `(id, p)`, `id` typed like the edges' `src`. */
+  private def massFrame(edges: DataFrame, e: GraphRounds.Edges, deg: RDD[(Long, Int)],
+      tele: Long => Long): DataFrame = {
+    val p0 = GraphRounds.mapState(deg)((v, o) => (o, tele(v)))
+    val mass = GraphRounds.iterate[(Int, Long), Long](e, p0, PrIters)(
+      { case (o, p) => Some(p / o) }, (a: Long, b: Long) => a + b,
+      { case (v, (o, _), in) => (o, (15L * tele(v) + 85L * in.getOrElse(0L)) / 100L) })
+    GraphRounds.frame(edges, mass,
+        StructType(Seq(StructField("id", LongType), StructField("p", LongType)))) {
+      case (v, (_, p)) => Some(Row(v, p))
+    }.withColumn("id", col("id").cast(edges.schema("src").dataType))
   }
-
-  /** [[PrIters]] rounds of the integer mass recurrence on the sources
-    * of `adj`, starting from `tele(v)`, a node's teleport mass:
-    * p' = (15·tele(v) + 85·inflow) div 100, inflow the sum of
-    * `p div outdeg` over v's in-edges. One shuffle per round. */
-  private def massRounds(adj: RDD[(Long, Array[Long])], tele: Long => Long): RDD[(Long, Long)] = {
-    val part = adj.partitioner.get
-    val p0 = adj.mapPartitions(_.map { case (v, _) => (v, tele(v)) }, preservesPartitioning = true)
-    (1 to PrIters).foldLeft(p0) { (p, _) =>
-      val inflow = adj.join(p, part)
-        .flatMap { case (_, (out, m)) => val c = m / out.length; out.iterator.map((_, c)) }
-        .reduceByKey(part, _ + _)
-      adj.leftOuterJoin(inflow, part).mapPartitions(_.map { case (v, (_, s)) =>
-        (v, (15L * tele(v) + 85L * s.getOrElse(0L)) / 100L)
-      }, preservesPartitioning = true)
-    }
-  }
-
-  /** Node masses `(id, p)` as a DataFrame, `id` typed like the edges'
-    * `src`. */
-  private def massFrame(edges: DataFrame, mass: RDD[(Long, Long)]): DataFrame =
-    edges.sparkSession.createDataFrame(mass.map { case (v, m) => Row(v, m) },
-      StructType(Seq(StructField("id", LongType), StructField("p", LongType))))
-      .withColumn("id", col("id").cast(edges.schema("src").dataType))
 
   /** DuckDB twin of [[pageRank]]: the identical integer iteration,
     * unrolled as [[PrIters]] chained CTEs over the shared k-NN-graph
@@ -2378,20 +2350,21 @@ object SimilarityQueries {
     * seed set instead of global authority. Top-[[PprTop]] by exact
     * integer mass (vec_id tiebreak) — the expansion candidates.
     *
-    * Scale shape: pageRank's message-passing rounds ([[massRounds]])
-    * over the same out-adjacency. The seed set is the [[CcSeeds]]
-    * smallest source ids, taken once at construction with
-    * `takeOrdered` (a bounded top-[[CcSeeds]] per partition, then a
-    * merge: the construction's one job), and rides into the rounds'
-    * closure as a constant, so no round joins or ranks it. */
+    * Scale shape: pageRank's message-passing rounds ([[massFrame]])
+    * over the same edges. The seed set is the [[CcSeeds]] smallest
+    * source ids, taken once at construction with
+    * [[GraphRounds.smallest]] (a bounded top-[[CcSeeds]] per partition,
+    * then a merge: the construction's one job), and rides into the
+    * rounds' update as a constant, so no round joins or ranks it. */
   def pprSeeds(spark: SparkSession, dir: String): DataFrame =
     pprSeedsOnEdges(knnEdgesScratch(spark, dir))
 
   private[graft] def pprSeedsOnEdges(edges: DataFrame): DataFrame = {
-    val adj = outAdjacency(edges)
-    val seeds = adj.keys.takeOrdered(CcSeeds).toSet
+    val e = GraphRounds.edges(edges)
+    val deg = GraphRounds.degree(e)
+    val seeds = GraphRounds.smallest(deg, CcSeeds)
     val tele = PrScale / CcSeeds
-    massFrame(edges, massRounds(adj, v => if (seeds(v)) tele else 0L))
+    massFrame(edges, e, deg, v => if (seeds(v)) tele else 0L)
       .orderBy(desc("p"), asc("id")).limit(PprTop)
       .withColumn("rank", row_number().over(Window.orderBy(desc("p"), asc("id"))))
       .select(col("rank"), col("id").as("vec_id"), col("p").as("ppr12"),
@@ -2714,17 +2687,17 @@ object SimilarityQueries {
     * the operator contract under test is the propagation semantics,
     * which the oracle replays exactly.
     *
-    * Scale: vertex-centric message passing over the out-adjacency
-    * ([[outAdjacency]]). The node state `(lab, label)` is partitioned
-    * once onto the adjacency's partitioner. Each round joins the
-    * labeled nodes with the adjacency narrowly, sends each label along
-    * the out-edges, combines the votes map-side into a per-target
-    * `Map[label, count]` (one shuffle; a map is bounded by the label
-    * count), picks by (count desc, label asc) and joins the pick back
-    * narrowly, where `lab.orElse(best)` freezes it. Labels stay
-    * nullable: a node with no label is `None`, never a sentinel value,
-    * so any int is a label. The fixpoint runs as one Spark job, and
-    * construction starts none (see [[outAdjacency]] for why). */
+    * Scale: [[LpIters]] message-passing rounds of
+    * [[GraphRounds.step]]. The node state `(lab, label)` is partitioned
+    * once onto the edges' partitioner. Each round a labeled node sends
+    * its label along its out-edges, the votes combine map-side into a
+    * per-target `Map[label, count]` (the round's only shuffle; a map is
+    * bounded by the label count), and a node takes
+    * `lab.orElse(pick)`, the pick by (count desc, label asc), which
+    * freezes it. Labels stay nullable: a node with no label is `None`,
+    * never a sentinel value, so any int is a label. The fixpoint runs
+    * as one Spark job; construction starts none, since the trunk and
+    * corpus reads carry known schemas and have no exchange. */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
     labelPropOn(knnEdgesScratch(spark, dir),
       Tables(spark, dir, "embeddings").select(col("vec_id"), col("label")))
@@ -2733,34 +2706,25 @@ object SimilarityQueries {
     * nodes `(vec_id, label)`. Edges whose source is not a node cast no
     * vote; votes for a non-node are dropped. */
   private[graft] def labelPropOn(edges: DataFrame, emb: DataFrame): DataFrame = {
-    val adj = outAdjacency(edges)
-    val part = adj.partitioner.get
+    val e = GraphRounds.edges(edges)
     val hide = LpHideMod
     // node → (current label, true label)
-    val nodes: RDD[(Long, (Option[Int], Option[Int]))] =
-      emb.select(col("vec_id").cast("long"), col("label").cast("int")).rdd
-        .map { r =>
-          val (v, l) = (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Int]))
-          (v, (if (v % hide == 0) None else l, l))
-        }
-        .partitionBy(part)
-    val labs = (1 to LpIters).foldLeft(nodes) { (cur, _) =>
-      val best = adj.join(cur.flatMapValues(_._1), part)
-        .flatMap { case (_, (out, l)) => out.iterator.map((_, l)) }
-        .combineByKey((l: Int) => Map(l -> 1),
-          (m: Map[Int, Int], l: Int) => m.updated(l, m.getOrElse(l, 0) + 1),
-          (a: Map[Int, Int], b: Map[Int, Int]) =>
-            b.foldLeft(a) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0) + c) },
-          part)
-        .mapValues(_.minBy { case (l, c) => (-c, l) }._1)
-      cur.leftOuterJoin(best, part).mapValues { case ((lab, label), b) => (lab.orElse(b), label) }
+    val nodes = GraphRounds.rows(emb.select(col("vec_id").cast("long"), col("label").cast("int"))) { r =>
+      val (v, l) = (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))
+      (v, (if (v % hide == 0) None else l, l))
     }
-    val hidden = labs.flatMap { case (v, (lab, label)) =>
-      if (v % hide == 0) Some(Row(v, label.map(Int.box).orNull, lab.map(Int.box).orNull)) else None
-    }
-    emb.sparkSession.createDataFrame(hidden, StructType(Seq(StructField("vec_id", LongType),
-        StructField("label_true", IntegerType), StructField("label_pred", IntegerType))))
-      .select(col("vec_id").cast(emb.schema("vec_id").dataType).as("vec_id"),
+    val labs = GraphRounds.iterate[(Option[Int], Option[Int]), Map[Int, Int]](
+      e, GraphRounds.partition(e, nodes), LpIters)(
+      { case (lab, _) => lab.map(l => Map(l -> 1)) },
+      (a: Map[Int, Int], b: Map[Int, Int]) =>
+        b.foldLeft(a) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0) + c) },
+      { case (_, (lab, label), votes) =>
+        (lab.orElse(votes.map(_.minBy { case (l, c) => (-c, l) }._1)), label) })
+    GraphRounds.frame(emb, labs, StructType(Seq(StructField("vec_id", LongType),
+        StructField("label_true", IntegerType), StructField("label_pred", IntegerType)))) {
+      case (v, (lab, label)) =>
+        if (v % hide == 0) Some(Row(v, label.map(Int.box).orNull, lab.map(Int.box).orNull)) else None
+    }.select(col("vec_id").cast(emb.schema("vec_id").dataType).as("vec_id"),
         col("label_true"), col("label_pred"),
         (col("label_pred") === col("label_true")).cast("int").as("correct"))
       .orderBy("vec_id")
@@ -3529,25 +3493,27 @@ object SimilarityQueries {
     * [[semanticClusters]] tells you WHO clusters, the core profile
     * tells you how much of the space is densely supported at all).
     *
-    * Scale shape: the state is the oriented edge rows `(v, u, life)`,
-    * both orientations of every undirected edge, where `life` is the
-    * last round the edge survives. Round r counts v's rows with
-    * `life = r − 1` in a window partitioned by v (v's degree), swaps
-    * each row to `(u, v)` carrying that count as the other endpoint's
-    * degree — the round's only exchange — and counts again in a window
-    * on the new v; the edge lives on iff both degrees reach k. The next
-    * round's first window sits on the same partitioning, so the
-    * unrolled rounds cost one exchange each plus the first, and every
-    * round reads its predecessor once: the plan grows linearly, needs
-    * no per-round pin and starts no job at construction. A lost
-    * shuffle output is recomputed from that linear lineage. The
-    * profile is two aggregates over the final rows — per node, its
-    * max life and its rows alive at each round; then one global sum,
-    * unpivoted to a row per round. Rounds are UNROLLED to a fixed
-    * count (identically in the oracle) rather than looped to fixpoint
-    * — the deterministic-replay trade both engines share; the
-    * per-round profile makes non-convergence visible instead of
-    * silent. Pure integer counts, no rounding anywhere. */
+    * Scale shape: node peeling, [[KcoreRounds]] message-passing rounds
+    * of [[GraphRounds.step]] over both orientations of every
+    * undirected edge. A node's state is its degree history, one int
+    * per round so far: deg₀ is its degree in the deduplicated edge
+    * set, and a node is alive while its last degree is > 0. In a round
+    * an alive node with degree < k dies and sends 1 along its edges;
+    * the messages sum map-side (the round's only shuffle); a node with
+    * degree ≥ k subtracts what it receives, and every other node's
+    * degree becomes 0. By induction an edge lives at round r iff both
+    * endpoint degrees at r − 1 are ≥ k, the oracle's rule, so round r's
+    * profile row is n_nodes = #{deg_r > 0} and n_edges = Σ deg_r / 2,
+    * one global aggregate over the final histories. The edges stream
+    * past a hash map of the partition's nodes, so a k-NN hub with an
+    * unbounded degree costs one state record, not a buffered row group:
+    * the per-partition state and inbox maps are O(|V|/P). The fixpoint
+    * is one Spark job; over the warm trunk construction starts none and
+    * writes no pin. Rounds are UNROLLED to a fixed count (identically
+    * in the oracle) rather than looped to fixpoint — the
+    * deterministic-replay trade both engines share; the per-round
+    * profile makes non-convergence visible instead of silent. Pure
+    * integer counts, no rounding anywhere. */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreOnUnd(undAdjScratch(spark, dir)) // shared keyed trunk (r13)
 
@@ -3555,30 +3521,18 @@ object SimilarityQueries {
     kcoreOnUnd(undOf(edges))
 
   private def kcoreOnUnd(und: DataFrame): DataFrame = {
-    val byV = Window.partitionBy("v")
-    def liveDegree(r: Int) =
-      count(when(col("life") === r - 1, 1)).over(byV)
-    var rows = und
-      .select(explode(array(
-        struct(col("src").as("v"), col("dst").as("u")),
-        struct(col("dst").as("v"), col("src").as("u")))).as("e"))
-      .select(col("e.v"), col("e.u"), lit(0).as("life"))
-    for (r <- 1 to KcoreRounds) {
-      rows = rows
-        .withColumn("du", liveDegree(r))
-        // the swap: du is now the degree of the row's other endpoint
-        .select(col("u").as("v"), col("v").as("u"), col("life"), col("du"))
-        .select(col("v"), col("u"),
-          when(col("life") === r - 1 && col("du") >= KcoreK &&
-            liveDegree(r) >= KcoreK, lit(r)).otherwise(col("life")).as("life"))
-    }
-    // a node is in round r's graph iff one of its edges lives to r
+    val k = KcoreK
+    val e = GraphRounds.edges(und, both = true)
+    val peeled = GraphRounds.iterate[Vector[Int], Int](
+        e, GraphRounds.mapState(GraphRounds.degree(e))((_, d) => Vector(d)), KcoreRounds)(
+      { h => val d = h.last; if (d > 0 && d < k) Some(1) else None }, (a: Int, b: Int) => a + b,
+      { case (_, h, in) => val d = h.last; h :+ (if (d >= k) d - in.getOrElse(0) else 0) })
     val rounds = 0 to KcoreRounds
-    val perNode = rows.groupBy("v").agg(max("life").as("top"),
-      rounds.map(r => count(when(col("life") >= r, 1)).as(s"rows$r")): _*)
+    val perNode = GraphRounds.frame(und, peeled,
+      StructType(rounds.map(r => StructField(s"d$r", IntegerType))))((_, h) => Some(Row.fromSeq(h)))
     val sums = rounds.flatMap(r => Seq(
-      count(when(col("top") >= r, 1)).as(s"n$r"),
-      coalesce(sum(s"rows$r"), lit(0L)).as(s"m$r")))
+      count(when(col(s"d$r") > 0, 1)).as(s"n$r"),
+      coalesce(sum(s"d$r"), lit(0L)).as(s"m$r")))
     perNode.agg(sums.head, sums.tail: _*)
       .select(explode(array(rounds.map(r => struct(
         lit(r.toLong).as("round"),
@@ -3593,8 +3547,9 @@ object SimilarityQueries {
     // predecessor 3× and the profile re-reads every e_r — inlining
     // would re-expand the LSH pipeline exponentially (observed as a
     // file-handle blowup); materialization makes the unroll linear.
-    // The Spark side needs no materialization: its recurrence reads
-    // each round once and derives the whole profile from the last one
+    // The Spark side needs no materialization: it peels nodes by
+    // message passing and derives the whole profile from each node's
+    // degree history
     val rounds = (1 to KcoreRounds).map { r =>
       val prev = s"e${r - 1}"
       s"""k$r AS MATERIALIZED (SELECT v FROM (

@@ -327,12 +327,13 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("fixpoint convergence rides the round job: no count() action, one action per plain round") {
     // VERDICT r4 #4: components() used to run a second count() action
-    // per round to detect convergence; the accumulator now rides the
-    // round's own checkpoint job. QueryExecutionListener sees every
-    // Dataset action — assert zero "count" actions, and on an
+    // per round to detect convergence; the changed-label count is now
+    // an observe() metric on the frame the round's pin writes, so the
+    // pin write is the round's only action. QueryExecutionListener sees
+    // every Dataset action — assert zero "count" actions, and on an
     // all-plain-rounds graph (triangle: converges in 2 plain rounds)
-    // exactly 4 actions total: edges ckpt + initial labels ckpt +
-    // ONE per round.
+    // exactly 4 actions total: edges pin + initial labels pin + ONE
+    // pin write per round.
     val names = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -352,13 +353,14 @@ class DedupSimilaritySpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       val tri = Seq((201L, 200L), (200L, 202L)).toDF("d1", "d2")
-      DedupQueries.components(tri) // checkpoints run eagerly inside
+      DedupQueries.components(tri) // the PinChain writes run eagerly inside
       val triActions = stable()
       assert(!triActions.contains("count"), s"count() action in round loop: $triActions")
       assert(triActions.size == 4, s"expected 4 actions (2 setup + 2 plain rounds): $triActions")
       names.clear()
-      // a 64-chain flips into path halving (2 actions per halving
-      // round — inner + outer ckpt) but must still never count()
+      // a 64-chain flips into path halving (its jumps read the
+      // previous round's pinned labels, so a halving round is still one
+      // pin write) but must still never count()
       val chain = (0L until 63L).map(i => (i, i + 1)).toDF("d1", "d2")
       val got = DedupQueries.components(chain)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

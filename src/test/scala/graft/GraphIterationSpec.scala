@@ -5,24 +5,26 @@ import org.apache.spark.rdd.{CoGroupedRDD, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.FileScanRDD
-import graft.queries.SimilarityQueries
+import graft.queries.{GraphRounds, SimilarityQueries}
 
 /** PageRank, personalized PageRank and label propagation
   * ([[SimilarityQueries.pageRankOnEdges]], `pprSeedsOnEdges`,
   * `labelPropOn`): each message-passing fixpoint against a plain-Scala
-  * replay of the oracle's iteration on seeded random graphs, and the
-  * lineage the fixpoints exist for — one read of the edge relation,
-  * narrow joins only, one shuffle per round plus the adjacency's (and
+  * replay of the oracle's iteration on seeded random graphs. For these
+  * and k-core (replayed in `GraphPeelingSpec`), the lineage the
+  * [[GraphRounds]] kernel exists for — one read of the edge trunk, no
+  * join, narrow zips only, one shuffle per round plus the edges' (and
   * label propagation's node partitioning), and at most one job at
-  * construction. */
+  * construction — and the size of the kernel's class file. */
 class GraphIterationSpec extends SparkSpec {
 
-  // SimilarityQueries.PrIters, PrScale, CcSeeds, PprTop, LpIters
+  // SimilarityQueries.PrIters, PrScale, CcSeeds, PprTop, LpIters, KcoreRounds
   private val PrIters = 5
   private val Scale = 1000000000000L
   private val Seeds = 8
   private val PprTop = 20
   private val LpIters = 3
+  private val KcoreRounds = 6
 
   type Edges = Seq[(Long, Long)]
 
@@ -166,26 +168,31 @@ class GraphIterationSpec extends SparkSpec {
 
   test("each fixpoint scans the edge relation once, joins narrowly and shuffles once per round") {
     Seq(
-      // the adjacency's groupByKey, then one reduceByKey per round
-      ("pageRank", () => SimilarityQueries.pageRank(spark, sfDir), PrIters + 1),
-      ("pprSeeds", () => SimilarityQueries.pprSeeds(spark, sfDir), PrIters + 1),
-      // plus the node state's partitionBy
-      ("labelProp", () => SimilarityQueries.labelProp(spark, sfDir), LpIters + 2)
-    ).foreach { case (name, build, shuffles) =>
+      // the edges' partitioning, then one message shuffle per round
+      ("pageRank", () => SimilarityQueries.pageRank(spark, sfDir), "knnedges", PrIters),
+      ("pprSeeds", () => SimilarityQueries.pprSeeds(spark, sfDir), "knnedges", PrIters),
+      // plus the node state's partitioning
+      ("labelProp", () => SimilarityQueries.labelProp(spark, sfDir), "knnedges", LpIters),
+      ("kcore", () => SimilarityQueries.kcore(spark, sfDir), "undadj", KcoreRounds)
+    ).foreach { case (name, build, trunk, rounds) =>
       val rdds = build().queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
       assert(rdds.size == 1, s"$name reads ${rdds.size} RDDs")
       val all = lineage(rdds.head)
-      val edgeScans = all.collect {
+      val trunkScans = all.collect {
         case s: FileScanRDD
-          if s.filePartitions.exists(_.files.exists(_.filePath.toString.contains("/knnedges-"))) => s
+          if s.filePartitions.exists(_.files.exists(_.filePath.toString.contains(s"/$trunk-"))) => s
       }
-      assert(edgeScans.size == 1, s"$name scans the edge relation ${edgeScans.size} times")
-      val joins = all.collect { case c: CoGroupedRDD[_] => c }
-      assert(joins.nonEmpty, s"$name joins nothing")
-      joins.foreach { j =>
-        assert(j.dependencies.forall(_.isInstanceOf[OneToOneDependency[_]]),
-          s"$name shuffles into a join: ${j.dependencies}")
+      assert(trunkScans.size == 1, s"$name scans the $trunk trunk ${trunkScans.size} times")
+      val cogroups = all.collect { case c: CoGroupedRDD[_] => c }
+      assert(cogroups.isEmpty, s"$name joins: $cogroups")
+      // ZippedPartitionsRDD2 is private to Spark: matched by name
+      val zips = all.filter(_.getClass.getSimpleName == "ZippedPartitionsRDD2")
+      assert(zips.size == 2 * rounds, s"$name zips ${zips.size} times, want ${2 * rounds}")
+      zips.foreach { z =>
+        assert(z.dependencies.forall(_.isInstanceOf[OneToOneDependency[_]]),
+          s"$name shuffles into a zip: ${z.dependencies}")
       }
+      val shuffles = rounds + (if (name == "labelProp") 2 else 1)
       val n = all.flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
       assert(n == shuffles, s"$name shuffles $n times, want $shuffles")
     }
@@ -198,5 +205,28 @@ class GraphIterationSpec extends SparkSpec {
     assert(jobsDuring(SimilarityQueries.labelPropOn(e, n))._2 == 0)
     assert(jobsDuring(SimilarityQueries.pageRankOnEdges(e))._2 == 1)
     assert(jobsDuring(SimilarityQueries.pprSeedsOnEdges(e))._2 == 1)
+    // over warm trunks (and a warm corpus-schema memo) the keys' own
+    // builders start the same counts: kcore and labelProp none
+    val keys = Seq[(String, () => DataFrame, Int)](
+      ("kcore", () => SimilarityQueries.kcore(spark, sfDir), 0),
+      ("labelProp", () => SimilarityQueries.labelProp(spark, sfDir), 0),
+      ("pageRank", () => SimilarityQueries.pageRank(spark, sfDir), 1),
+      ("pprSeeds", () => SimilarityQueries.pprSeeds(spark, sfDir), 1))
+    keys.foreach { case (_, build, _) => build() }
+    keys.foreach { case (name, build, want) =>
+      val got = jobsDuring(build())._2
+      assert(got == want, s"constructing $name started $got job(s), want $want")
+    }
+  }
+
+  test("the GraphRounds kernel's class file stays small") {
+    // Spark's ClosureCleaner reads and parses the whole class file that
+    // defines a closure each time the closure is passed to an RDD
+    // operator; every round closure of the graph fixpoints lives in
+    // GraphRounds$, so its size is paid per operator per construction
+    val in = classOf[GraphRounds.Edges].getClassLoader.getResourceAsStream("graft/queries/GraphRounds$.class")
+    assert(in != null, "GraphRounds$.class not found")
+    val bytes = try in.readAllBytes().length finally in.close()
+    assert(bytes <= 64 * 1024, s"GraphRounds$$.class is $bytes bytes")
   }
 }

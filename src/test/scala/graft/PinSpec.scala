@@ -9,7 +9,8 @@ import graft.queries.DedupQueries
 /** The transient-pin path: [[Tables.scratchPin]] and [[Tables.PinChain]]
   * start only their write's jobs and hand back a read with the written
   * frame's schema, and [[DedupQueries.components]] keeps all of its
-  * round state on that path. */
+  * round state on that path. A corpus read through [[Tables.apply]]
+  * infers a table's schema once per file version. */
 class PinSpec extends SparkSpec {
 
   private def pinRoot = s"${Tables.scratchDir}/pins/${Tables.sessionToken(spark)}"
@@ -45,6 +46,23 @@ class PinSpec extends SparkSpec {
     val pc = new Tables.PinChain("pinspec-chain")
     pc.next(spark.range(3).toDF("id"))
     checkPin(pc.next, s"$pinRoot/pinspec-chain-l2.parquet")
+  }
+
+  test("a corpus read infers a table's schema once, and again after the file is rewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("corpus-memo").toFile
+    try {
+      val path = s"$dir/t.parquet"
+      spark.range(3).select(col("id").as("a")).write.parquet(path)
+      Tables(spark, dir.toString, "t") // first read: infers
+      val (first, jobs) = jobsDuring(Tables(spark, dir.toString, "t"))
+      assert(jobs == 0, s"a second read of a known table started $jobs job(s)")
+      assert(first.columns.toSeq == Seq("a"))
+      spark.range(3).select(col("id").cast("string").as("b"), col("id").as("c"))
+        .write.mode("overwrite").parquet(path)
+      val second = Tables(spark, dir.toString, "t")
+      assert(second.schema.map(f => f.name -> f.dataType) == Seq("b" -> StringType, "c" -> LongType))
+      assert(second.count() == 3)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
   test("components keeps its round state under pins/<token> and gives the min labels") {
